@@ -59,7 +59,7 @@ def test_compaction_rebase_is_metadata_only(spark, tmp_path):
     late delta must stay live (override the compacted base by LWW)."""
     root = str(tmp_path / "lake")
     a = ParquetLakeTable(spark, root)
-    a.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=2, mode="mor")
+    a.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=2)
     convs = [f"c{i}" for i in range(6)]
     for k in range(3):  # stack 3 delta generations
         a.merge(_batch(spark, 100 * (k + 1), convs, {0: f"v{k}"}), batch_id=k)
@@ -102,7 +102,7 @@ def test_compaction_conflict_falls_back_to_recompute(spark, tmp_path):
     recompute from the winner's manifest and still land a correct table."""
     root = str(tmp_path / "lake")
     a = ParquetLakeTable(spark, root)
-    a.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=2, mode="mor")
+    a.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=2)
     convs = [f"c{i}" for i in range(6)]
     for k in range(3):
         a.merge(_batch(spark, 100 * (k + 1), convs, {0: f"v{k}"}), batch_id=k)
@@ -185,3 +185,32 @@ def test_ingest_and_compactor_race_one_table(spark, tmp_path):
     assert compactor.stats.majors >= 1
     # drain pass bounded the read amplification at shutdown
     assert table.run_depth() <= 2
+
+
+def test_drain_runs_in_maintenance_pool_and_restores_callers(spark, tmp_path):
+    """stop(drain=True) folds in the caller's thread: its jobs must ride
+    the "maintenance" scheduler pool like the loop's, and the caller's own
+    pool must be back in place afterwards."""
+    table = ParquetLakeTable(spark, str(tmp_path / "lake"))
+    table.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=2)
+    table.merge(_batch(spark, 100, ["c0", "c1"], {0: "v0"}), batch_id=0)
+    table.compact_minor()  # one run per bucket: ripe at major_every=1
+    seen = []
+    orig = table.compact
+
+    def recording(*a, **kw):
+        seen.append(spark.sparkContext.getLocalProperty("spark.scheduler.pool"))
+        return orig(*a, **kw)
+
+    table.compact = recording
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.scheduler.pool")
+    sc.setLocalProperty("spark.scheduler.pool", "ingest")
+    try:
+        stats = BackgroundCompactor(table, major_every=1).stop(drain=True)
+        assert seen == ["maintenance"]
+        assert stats.majors == 1
+        assert sc.getLocalProperty("spark.scheduler.pool") == "ingest"
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", prev)
+    assert table.run_depth() == 0

@@ -39,7 +39,7 @@ def _state(table):
 @pytest.fixture()
 def rig(spark, tmp_path):
     up = ParquetLakeTable(spark, str(tmp_path / "up"))
-    up.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4, mode="mor")
+    up.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4)
     down = ParquetLakeTable(spark, str(tmp_path / "down"))
     consumer = ChangeFeedConsumer(up, str(tmp_path / "ckpt"))
     return up, down, consumer

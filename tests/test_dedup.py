@@ -85,3 +85,22 @@ def test_window_plan_has_partial_group_limit(spark):
     exch = plan.find("Exchange hashpartitioning")
     partial_line = plan.find(", Partial")
     assert exch != -1 and partial_line > exch, plan
+
+
+def test_agg_plan_is_sort_based_with_partial_below_exchange(spark):
+    """``max_by`` over a struct holding strings has no fixed-width
+    aggregation buffer, so Catalyst plans the agg strategy SORT-based, not
+    as a hash aggregate: Sort + SortAggregate(partial_max_by) -> Exchange
+    -> Sort + SortAggregate(max_by). Pin that shape, and that the partial
+    phase sits BELOW the one exchange (map-side combine: duplicates and
+    hot keys collapse before the shuffle)."""
+    out = lww_dedup_agg(_df(spark, ROWS), ["conv_id", "turn_idx"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "HashAggregate" not in plan, plan
+    assert plan.count("SortAggregate(") == 2, plan
+    exch = plan.find("Exchange hashpartitioning")
+    partial = plan.find("SortAggregate(", exch)
+    assert partial > exch, plan
+    assert "partial_max_by" in plan[partial:], plan
+    assert "partial_max_by" not in plan[:exch], plan

@@ -86,35 +86,25 @@ def test_compact_then_expire_removes_orphan_files(table, spark):
     assert table.compact().skipped
 
 
-def test_cow_and_mor_converge(spark, tmp_path):
-    """Same change stream applied in cow and mor modes yields the identical
-    final table (the modes differ only in physical layout)."""
-    from xgeo_spark.fixtures.generator import (
-        ChangeStreamConfig,
-        generate_change_events,
-        lww_oracle,
-        write_change_stream_parquet,
-    )
-    from xgeo_spark.streaming.pipeline import CDCIngestPipeline, IngestConfig
-
-    cfg = ChangeStreamConfig(n_events=5000, n_convs=80, seed=21, n_files=4)
-    feed = str(tmp_path / "feed")
-    write_change_stream_parquet(feed, cfg)
-    finals = {}
-    for mode in ("cow", "mor"):
-        t = ParquetLakeTable(spark, str(tmp_path / f"lake_{mode}"))
-        pipe = CDCIngestPipeline(
-            spark, feed, t,
-            config=IngestConfig(n_buckets=8, lineage=False, merge_mode=mode,
-                                compact_threshold=2),
-        )
-        pipe.run_batch_replay(files_per_batch=1)
-        finals[mode] = (
-            t.read().orderBy("conv_id", "turn_idx").toPandas().fillna("∅")
-        )
-    pd.testing.assert_frame_equal(finals["cow"], finals["mor"])
-    oracle = lww_oracle(generate_change_events(cfg))
-    assert finals["mor"]["text"].tolist() == oracle["text"].fillna("∅").tolist()
+def test_copy_on_write_manifest_reads_and_merges_as_mor(table, spark):
+    """A manifest written by an older copy-on-write table ("mode": "cow",
+    base files only, an empty deltas map) reads as-is, and a merge on top
+    of it appends a delta like on any other table."""
+    table.compact()
+    m = table.manifest()
+    table._commit({**m, "version": m["version"] + 1, "mode": "cow",
+                   "deltas": {}})
+    v_cow = table.current_version()
+    assert {r["turn_idx"]: r["text"] for r in table.read().collect()} == {
+        0: "v2-a", 1: "v1-b", 2: "v3-c"}
+    table.merge(_batch(spark, 30, {1: "v4-b"}), batch_id=3)
+    assert table.delta_depth() == 1
+    assert table.manifest()["buckets"] == m["buckets"]  # base untouched
+    now = {r["turn_idx"]: r["text"] for r in table.read().collect()}
+    assert now == {0: "v2-a", 1: "v4-b", 2: "v3-c"}
+    assert {r["turn_idx"]: r["text"] for r in table.lookup("c").collect()} == now
+    changes = table.table_changes(v_cow).collect()
+    assert [(r["turn_idx"], r["text"]) for r in changes] == [(1, "v4-b")]
 
 
 def test_merge_plan_has_single_shuffle(spark, tmp_path):
@@ -255,7 +245,7 @@ def test_minor_major_cadence_matches_oracle(spark, tmp_path):
     pipe = CDCIngestPipeline(
         spark, feed, t,
         config=IngestConfig(n_buckets=8, lineage=False, compact_threshold=2,
-                            minor_compaction=True, major_every=2),
+                            major_every=2),
     )
     pipe.run_batch_replay(files_per_batch=1)
     kinds = {
@@ -312,7 +302,7 @@ def _pipe_for(spark, tmp_path, table, **cfg_kwargs):
     feed.mkdir(exist_ok=True)
     return CDCIngestPipeline(
         spark, str(feed), table,
-        config=IngestConfig(lineage=False, minor_compaction=True, **cfg_kwargs),
+        config=IngestConfig(lineage=False, **cfg_kwargs),
     )
 
 
@@ -424,8 +414,7 @@ def test_sharded_major_replay_matches_oracle(spark, tmp_path):
     pipe = CDCIngestPipeline(
         spark, feed, t,
         config=IngestConfig(n_buckets=8, lineage=False, compact_threshold=2,
-                            minor_compaction=True, major_every=2,
-                            major_shards=4),
+                            major_every=2, major_shards=4),
     )
     pipe.run_batch_replay(files_per_batch=1)
     majors = [c for c in t.history()
@@ -508,7 +497,7 @@ def test_wide_bucket_layout_writes_only_touched_buckets(spark, tmp_path):
     pipe = CDCIngestPipeline(
         spark, feed, t,
         config=IngestConfig(n_buckets=512, lineage=False,
-                            minor_compaction=True, major_shards=4),
+                            major_shards=4),
     )
     pipe.run_batch_replay(files_per_batch=2)
 

@@ -38,7 +38,7 @@ CONVS_B = [f"b{i}" for i in range(8)]
 @pytest.fixture()
 def table(spark, tmp_path):
     t = ParquetLakeTable(spark, str(tmp_path / "lake"))
-    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4, mode="mor")
+    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4)
     t.merge(_batch(spark, 0, CONVS_A, JAN), batch_id=0)
     t.merge(_batch(spark, 100, CONVS_B, FEB), batch_id=1)
     return t
@@ -154,7 +154,7 @@ def test_scan_lsn_bounds(table):
 
 def test_selective_compaction_folds_only_deep_buckets(spark, tmp_path):
     t = ParquetLakeTable(spark, str(tmp_path / "lake"))
-    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4, mode="mor")
+    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4)
     t.merge(_batch(spark, 0, CONVS_A + ["hot"], JAN), batch_id=0)
     for i in range(3):  # only "hot"'s bucket stacks deltas
         t.merge(_batch(spark, 100 * (i + 1), ["hot"], FEB), batch_id=i + 1)
@@ -164,7 +164,7 @@ def test_selective_compaction_folds_only_deep_buckets(spark, tmp_path):
     assert depths[hot] == 4
     before = {(r["conv_id"], r["turn_idx"]): r["text"]
               for r in t.read().collect()}
-    t.compact(min_depth=4)
+    t.compact(buckets=[int(b) for b, d in depths.items() if d >= 4])
     m2 = t.manifest()
     assert m2["deltas"][hot] == []       # the deep bucket folded
     for b, fl in m["deltas"].items():    # cold buckets untouched

@@ -50,7 +50,6 @@ def _mk(spark, root, n_buckets, compact_threshold):
             n_buckets=n_buckets,
             lineage=False,
             compact_threshold=compact_threshold,
-            minor_compaction=True,
             major_every=2,
             background_major=True,
         ),
@@ -125,7 +124,7 @@ def test_maintenance_schedule_never_corrupts(spark, tmp_path_factory, raw):
         config=IngestConfig(
             n_buckets=s["n_buckets"], lineage=False,
             compact_threshold=s["compact_threshold"],
-            minor_compaction=True, major_every=2, background_major=True,
+            major_every=2, background_major=True,
         ),
     )
     stats2 = pipe2.run_batch_replay(files_per_batch=s["files_per_batch"])

@@ -61,7 +61,7 @@ stream_st = st.fixed_dictionaries(
         "files_per_batch": st.integers(1, 2),
         "n_buckets": st.sampled_from([1, 2, 4]),
         "compact_threshold": st.sampled_from([1, 2, 8]),
-        "minor": st.booleans(),
+        "major_every": st.sampled_from([1, 2]),
         "major_shards": st.sampled_from([1, 2]),
         "normalize": st.booleans(),
     }
@@ -142,8 +142,7 @@ def test_pipeline_matches_oracle_on_arbitrary_streams(spark, tmp_path_factory, r
             lineage=False,
             normalize_text=raw["normalize"],
             compact_threshold=raw["compact_threshold"],
-            minor_compaction=raw["minor"],
-            major_every=2,
+            major_every=raw["major_every"],
             major_shards=raw["major_shards"],
         ),
     )
@@ -175,7 +174,7 @@ def test_pipeline_matches_oracle_on_arbitrary_streams(spark, tmp_path_factory, r
             n_buckets=raw["n_buckets"], lineage=False,
             normalize_text=raw["normalize"],
             compact_threshold=raw["compact_threshold"],
-            minor_compaction=raw["minor"], major_every=2,
+            major_every=raw["major_every"],
             major_shards=raw["major_shards"],
         ),
     )

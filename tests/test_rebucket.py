@@ -31,7 +31,7 @@ def _state(table):
 @pytest.fixture()
 def table(spark, tmp_path):
     t = ParquetLakeTable(spark, str(tmp_path / "lake"))
-    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4, mode="mor")
+    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4)
     t.merge(_batch(spark, 0, [f"c{i}" for i in range(10)]), batch_id=0)
     t.merge(_batch(spark, 100, ["c3", "c7"]), batch_id=1)          # updates
     t.merge(_batch(spark, 200, ["c9"], op="D"), batch_id=2)        # delete

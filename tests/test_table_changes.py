@@ -3,8 +3,7 @@
 The contract under test is the consumer loop: a reader holding snapshot
 v_from applies the emitted net changes (upserts replace/insert by key,
 deletes drop the key) and must land EXACTLY on snapshot v_to — across
-updates, deletes, multi-writes to one key, compaction rewrites, and both
-merge modes.
+updates, deletes, multi-writes to one key, and compaction rewrites.
 """
 
 from __future__ import annotations
@@ -47,9 +46,9 @@ def _apply_changes(state_from: dict, changes) -> dict:
     return out
 
 
-def _make(spark, tmp_path, mode: str) -> ParquetLakeTable:
-    t = ParquetLakeTable(spark, str(tmp_path / f"lake_{mode}"))
-    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4, mode=mode)
+def _make(spark, tmp_path) -> ParquetLakeTable:
+    t = ParquetLakeTable(spark, str(tmp_path / "lake"))
+    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4)
     t.merge(_batch(spark, 0, {0: "a1", 1: "b1", 2: "c1"}), batch_id=0)   # v1
     t.merge(_batch(spark, 10, {0: "a2", 3: "d1"}), batch_id=1)           # v2
     t.merge(_batch(spark, 20, {1: "gone"}, op="D"), batch_id=2)          # v3
@@ -57,9 +56,9 @@ def _make(spark, tmp_path, mode: str) -> ParquetLakeTable:
     return t
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_consumer_reaches_target_snapshot(spark, tmp_path, mode):
-    t = _make(spark, tmp_path, mode)
+    t = _make(spark, tmp_path)
     for v_from in range(0, t.current_version() + 1):
         for v_to in range(v_from, t.current_version() + 1):
             changes = t.table_changes(v_from, v_to).collect()
@@ -68,7 +67,7 @@ def test_consumer_reaches_target_snapshot(spark, tmp_path, mode):
 
 
 def test_net_effect_and_commit_versions(spark, tmp_path):
-    t = _make(spark, tmp_path, "mor")
+    t = _make(spark, tmp_path)
     rows = {r["turn_idx"]: r for r in t.table_changes(0).collect()}
     # turn 0 written in v1, v2, v4 -> ONE net row, the v4 postimage
     assert rows[0]["text"] == "a3"
@@ -81,7 +80,7 @@ def test_net_effect_and_commit_versions(spark, tmp_path):
 
 
 def test_changes_across_compaction(spark, tmp_path):
-    t = _make(spark, tmp_path, "mor")
+    t = _make(spark, tmp_path)
     v_before = t.current_version()
     t.compact()  # folds deltas into base, carrying old _seq values
     t.merge(_batch(spark, 40, {5: "f1"}), batch_id=4)
@@ -100,7 +99,7 @@ def test_compaction_window_prunes_with_footer_stats(spark, tmp_path):
     holding only pre-window rows from the diff scan instead of rescanning
     the whole refolded base. Asserts on the actual planned file sets (spy
     on _read_files) AND that the pruned read stays correct."""
-    t = _make(spark, tmp_path, "mor")          # v1..v4, all one conv "c"
+    t = _make(spark, tmp_path)          # v1..v4, all one conv "c"
     t.compact()                                 # v5: refolds, carries _seq
     v5 = t.current_version()
     t.merge(_batch(spark, 40, {5: "f1"}), batch_id=4)   # v6
@@ -137,7 +136,7 @@ def test_changes_across_schema_evolution(spark, tmp_path):
     # window spans a commit that ADDS a column: changes are emitted at
     # v_to's schema, rows written before the evolution read as null
     t = ParquetLakeTable(spark, str(tmp_path / "lake_evo"))
-    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4, mode="mor")
+    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=4)
     t.merge(_batch(spark, 0, {0: "a1", 1: "b1"}), batch_id=0)            # v1
     evolved = _batch(spark, 10, {2: "c1"}).withColumn(
         "tool_meta", F.lit("m2")
@@ -152,7 +151,7 @@ def test_changes_across_schema_evolution(spark, tmp_path):
 
 
 def test_empty_window_and_errors(spark, tmp_path):
-    t = _make(spark, tmp_path, "mor")
+    t = _make(spark, tmp_path)
     empty = t.table_changes(t.current_version(), t.current_version())
     assert empty.count() == 0
     assert "_change_type" in empty.columns
@@ -163,14 +162,14 @@ def test_empty_window_and_errors(spark, tmp_path):
         t.table_changes(0)
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_late_lower_lsn_event_emits_no_stale_change(spark, tmp_path, mode):
     """A late event with a LOWER lsn than the already-applied state loses
     LWW on read() — and must lose in the change feed too: emitting its
     postimage would hand consumers a stale value. The winner is decided
     against ALL of the key's rows at v_to, not just the in-range ones."""
     t = ParquetLakeTable(spark, str(tmp_path / f"lake_{mode}"))
-    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=2, mode=mode)
+    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=2)
     t.merge(_batch(spark, 200, {0: "new", 1: "other"}), batch_id=0)   # v1
     v1 = t.current_version()
     t.merge(_batch(spark, 100, {0: "stale"}), batch_id=1)             # v2: late
@@ -188,7 +187,7 @@ def test_late_lower_lsn_event_does_not_resurrect_delete(spark, tmp_path):
     """Delete at lsn 200 propagated; a late U at lsn 150 merges later and
     loses — the change feed must not emit an upsert for the dead key."""
     t = ParquetLakeTable(spark, str(tmp_path / "lake"))
-    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=2, mode="mor")
+    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=2)
     t.merge(_batch(spark, 0, {0: "alive", 1: "x"}), batch_id=0)        # v1
     t.merge(_batch(spark, 200, {0: "dead"}, op="D"), batch_id=1)       # v2
     v2 = t.current_version()
@@ -209,7 +208,7 @@ def test_changes_across_minor_compaction(spark, tmp_path):
     like a major: windows spanning the minor answer the consumer loop
     correctly (run rows carry their original _seq, so pre-window rows are
     filtered), and a window strictly after it emits only the new write."""
-    t = _make(spark, tmp_path, "mor")
+    t = _make(spark, tmp_path)
     v_before = t.current_version()
     t.compact_minor()  # v5: deltas -> one run per bucket, base untouched
     assert t.run_depth() >= 1

@@ -264,7 +264,7 @@ def main():
         spark, feed, table, lineage_path=lineage,
         config=IngestConfig(
             n_buckets=args.n_buckets, normalize_text=True, adaptive=False,
-            compact_threshold=args.compact_threshold, minor_compaction=True,
+            compact_threshold=args.compact_threshold,
             major_every=args.major_every, major_shards=args.major_shards,
         ),
     )
@@ -478,7 +478,6 @@ def main():
         "gen_total_s": round(sum(w["gen_s"] for w in wave_meta), 1),
         "parallelism": args.parallelism,
         "pipelined": "gen and oracle folds overlap apply on background lanes",
-        "minor_compaction": True,
         "major_every": args.major_every,
         "major_shards": args.major_shards,
         "compact_threshold": args.compact_threshold,

@@ -143,7 +143,7 @@ def main():
         spark, feed, table, lineage_path=lineage,
         config=IngestConfig(
             n_buckets=32, normalize_text=True, adaptive=False,
-            compact_threshold=8, minor_compaction=True,
+            compact_threshold=8,
             major_every=args.major_every,
             major_shards=args.major_shards,
             background_major=args.background_major,
@@ -316,7 +316,6 @@ def main():
         "wall_total_s": round(sum(w["gen_s"] + w["apply_s"] + w["oracle_s"]
                                   for w in wave_meta), 1),
         "parallelism": args.parallelism,
-        "minor_compaction": True,
         "major_every": args.major_every,
         "major_shards": args.major_shards,
         "background_major": args.background_major,

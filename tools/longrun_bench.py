@@ -58,13 +58,13 @@ def parse_args():
     p.add_argument("--parallelism", type=int, default=32)
     p.add_argument("--skip-verify", action="store_true",
                    help="skip the DuckDB final-state cross-check")
-    p.add_argument("--minor-compaction", action="store_true",
-                   help="two-level LSM cadence: minor folds at the "
-                        "threshold, major every --major-every runs")
-    p.add_argument("--major-every", type=int, default=4)
+    p.add_argument("--major-every", type=int, default=1,
+                   help="fold cadence: 1 = always major at the threshold; "
+                        "k > 1 = two-level, minor folds at the threshold "
+                        "and a major every k-th fold")
     p.add_argument("--compact-threshold", type=int, default=8,
                    help="delta generations a bucket stacks before folding; "
-                        "with minor compaction the worst-pause fold window "
+                        "with --major-every > 1 the worst-pause fold window "
                         "is O(threshold x batch) rows, so halving it halves "
                         "the fold floor at identical total write work")
     p.add_argument("--major-shards", type=int, default=1,
@@ -111,7 +111,7 @@ def replay(spark, args, feed: str) -> tuple[list[dict], object]:
     cfg = IngestConfig(
         n_buckets=32, normalize_text=True, adaptive=False,
         compact_threshold=args.compact_threshold,
-        minor_compaction=args.minor_compaction, major_every=args.major_every,
+        major_every=args.major_every,
         major_shards=args.major_shards,
     )
     pipe = CDCIngestPipeline(spark, feed, table, lineage_path=lineage, config=cfg)
@@ -293,9 +293,8 @@ def main():
         "expire_every": args.expire_every,
         "keep_last": args.keep_last,
         "compact_threshold": args.compact_threshold,
-        "minor_compaction": args.minor_compaction,
-        "major_every": args.major_every if args.minor_compaction else None,
-        "major_shards": args.major_shards if args.minor_compaction else None,
+        "major_every": args.major_every,
+        "major_shards": args.major_shards,
         **decile_summary(batches),
         "final_delta_depth": batches[-1]["delta_depth"],
         "final_manifest_bytes": batches[-1]["manifest_bytes"],

@@ -67,7 +67,6 @@ def main():
         n_buckets=32,
         normalize_text=True,
         adaptive=False,
-        minor_compaction=True,
         major_shards=4,
         lineage=False,
         max_files_per_trigger=args.files_per_trigger,

@@ -20,11 +20,15 @@ Two physical strategies, identical semantics (property-tested equal):
   mitigated here with an optional two-phase salted pre-reduce.
 
 - ``lww_dedup_agg``: groupBy(keys).agg(max_by(struct(payload), order)).
-  Catalyst plans this as a hash aggregate with a PARTIAL phase before the
-  exchange (map-side combine), so duplicates and hot keys collapse *before*
-  the shuffle — at 10^10 events this is the difference between shuffling
-  the feed and shuffling ~|keys| rows. Skew needs no salting: partial
-  aggregation already spreads hot-key work across input partitions.
+  The struct holds strings, so its aggregation buffer is not fixed-width
+  and Catalyst plans a SORT-based aggregate: Sort + SortAggregate
+  (partial_max_by) -> Exchange -> Sort + SortAggregate (max_by). The
+  PARTIAL phase before the exchange is a map-side combine, so duplicates
+  and hot keys collapse *before* the shuffle — at 10^10 events this is the
+  difference between shuffling the feed and shuffling ~|keys| rows. Skew
+  needs no salting: partial aggregation already spreads hot-key work
+  across input partitions. The price is a per-task sort on each side of
+  the exchange (tests/test_dedup.py pins this plan).
 
 The pipeline defaults to the agg strategy; the window strategy is kept both
 as the semantic reference and for operator parity (SURVEY.md §2.4).

@@ -21,23 +21,20 @@ winner (the loser's rename fails → commit conflict). All driver-side IO
 goes through the Hadoop FileSystem API (see fsio.py), so the same code
 runs against file: in tests and HDFS/S3A on a cluster.
 
-Two merge strategies, selected at create() (Iceberg's copy-on-write vs
-merge-on-read, same trade-off):
+Merge-on-read (Iceberg's MoR): a merge appends the batch's deduped rows as
+DELTA files per bucket — write cost is O(batch), independent of table
+size. Reads union base+delta and reduce to the last writer per key
+(`max_by` over (lsn, commit-seq) — partial-aggregated, so the reduce is
+map-side combined). ``compact_minor()`` folds a bucket's raw deltas into
+one run file and ``compact()`` folds base+runs+raw into a new base; the
+pipeline's one policy (``streaming.pipeline.select_compaction``) decides
+per bucket when each runs, amortizing read cost while keeping ingest
+O(batch). At 10^10 events this is the difference between ingest
+throughput degrading linearly with table size and staying flat. A
+manifest written by an older copy-on-write table (``"mode": "cow"``, no
+deltas) reads and merges exactly like any other.
 
-- **cow**: a merge rewrites every bucket its batch touches — read-optimized
-  (reads are a plain scan), but write cost is O(touched table size) per
-  batch. With uniformly spread keys every batch rewrites the whole table.
-- **mor** (default for ingest): a merge appends the batch's deduped rows as
-  DELTA files per bucket — write cost is O(batch), independent of table
-  size. Reads union base+delta and reduce to the last writer per key
-  (`max_by` over (lsn, commit-seq) — partial-aggregated, so the reduce is
-  map-side combined). `compact()` folds deltas into the base; the pipeline
-  auto-compacts when a bucket accumulates more than
-  ``compact_threshold`` delta generations, amortizing read cost while
-  keeping ingest O(batch). At 10^10 events this is the difference between
-  ingest throughput degrading linearly with table size and staying flat.
-
-Scale design (both modes):
+Scale design:
 - The table is hash-bucketed on the key's conv_id (``pmod(xxhash64(conv_id),
   n_buckets)``) — the moral equivalent of Iceberg's ``bucket(N, conv_id)``
   hidden partitioning. At 100 TB you raise ``n_buckets`` (e.g. 4096) so each
@@ -73,7 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xgeo_spark.operators.dedup import lww_dedup_agg
-from xgeo_spark.plans.schema_evolution import align_to_schema, evolve_schema
+from xgeo_spark.plans.schema_evolution import evolve_schema
 from xgeo_spark.sinks.base import LakeTable, MergeStats
 from xgeo_spark.sinks.fsio import HadoopFS
 
@@ -267,21 +264,17 @@ class ParquetLakeTable(LakeTable):
         schema: T.StructType,
         key_cols: list[str],
         n_buckets: int = 64,
-        mode: str = "mor",
     ) -> None:
         if self.exists():
             raise ValueError(f"table already exists at {self.root}")
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"unknown merge mode: {mode}")
         manifest = {
             "version": 0,
             "schema": json.dumps(schema.jsonValue()),
             "key_cols": key_cols,
             "n_buckets": n_buckets,
-            "mode": mode,
             "last_batch_id": None,
             "buckets": {},      # bucket -> base files
-            "deltas": {},       # bucket -> delta files (mor only)
+            "deltas": {},       # bucket -> delta files (raw + runs)
             "file_stats": {},   # file -> rows/_lsn/ts min-max (data skipping)
             "commits": [],
         }
@@ -298,7 +291,9 @@ class ParquetLakeTable(LakeTable):
 
     def _lww_reduce(self, df: DataFrame, key_cols: list[str]) -> DataFrame:
         """Reduce (base ∪ deltas) to the last writer per key. Total order:
-        (_lsn, _seq) — partial hash aggregate, map-side combined."""
+        (_lsn, _seq). ``max_by`` over a struct holding strings plans as a
+        sort-based aggregate (Sort + partial SortAggregate -> Exchange ->
+        Sort + SortAggregate), map-side combined."""
         payload = [c for c in df.columns if c not in key_cols]
         ord_key = F.struct(
             F.col("_lsn").alias("l"), F.coalesce(F.col("_seq"), F.lit(0)).alias("s")
@@ -637,41 +632,14 @@ class ParquetLakeTable(LakeTable):
         """Commit log of the current snapshot (most recent last)."""
         return list(self.manifest().get("commits") or [])
 
-    def delta_depth(self) -> int:
-        """Max number of delta files stacked on any bucket (mor read cost)."""
-        m = self.manifest()
-        deltas = m.get("deltas") or {}
-        return max((len(v) for v in deltas.values()), default=0)
-
-    def raw_delta_depth(self) -> int:
-        """Max per-bucket count of RAW delta files (per-batch appends),
-        excluding minor-compaction runs — the minor-compaction trigger."""
-        m = self.manifest()
-        runs = set(m.get("run_files") or [])
-        deltas = m.get("deltas") or {}
-        return max(
-            (sum(1 for f in v if f not in runs) for v in deltas.values()),
-            default=0,
-        )
-
-    def run_depth(self) -> int:
-        """Max per-bucket count of minor-compaction RUN files — the major-
-        compaction trigger."""
-        m = self.manifest()
-        runs = set(m.get("run_files") or [])
-        deltas = m.get("deltas") or {}
-        return max(
-            (sum(1 for f in v if f in runs) for v in deltas.values()),
-            default=0,
-        )
-
-    def bucket_depths(self) -> dict[int, tuple[int, int]]:
-        """Per-bucket ``(raw_delta_count, run_count)`` from the manifest —
-        the per-bucket view of :meth:`raw_delta_depth` / :meth:`run_depth`,
-        so compaction triggers can decide bucket-by-bucket instead of on
-        global maxima (one cold bucket stuck below the fold threshold must
-        not force every trigger into a major)."""
-        m = self.manifest()
+    def bucket_depths(self, manifest: dict | None = None) -> dict[int, tuple[int, int]]:
+        """Per-bucket ``(raw_delta_count, run_count)`` from the manifest
+        (the current one unless ``manifest`` is given): raw deltas are the
+        per-batch appends, runs the minor folds' output. The compaction
+        policy decides bucket-by-bucket from this, never on global maxima
+        (one cold bucket stuck below the fold threshold must not force
+        every trigger into a major)."""
+        m = self.manifest() if manifest is None else manifest
         runs = set(m.get("run_files") or [])
         out: dict[int, tuple[int, int]] = {}
         for b, fl in (m.get("deltas") or {}).items():
@@ -679,27 +647,42 @@ class ParquetLakeTable(LakeTable):
             out[int(b)] = (len(fl) - nr, nr)
         return out
 
+    def delta_depth(self) -> int:
+        """Max number of delta files (raw + runs) stacked on any bucket —
+        the merge-on-read read cost."""
+        return max((r + n for r, n in self.bucket_depths().values()), default=0)
+
+    def raw_delta_depth(self) -> int:
+        """Max per-bucket count of RAW delta files (per-batch appends)."""
+        return max((r for r, _ in self.bucket_depths().values()), default=0)
+
+    def run_depth(self) -> int:
+        """Max per-bucket count of minor-compaction RUN files."""
+        return max((n for _, n in self.bucket_depths().values()), default=0)
+
     def compact(
         self,
         cluster_by: str | None = None,
         max_rows_per_file: int | None = None,
-        min_depth: int = 1,
         buckets: list[int] | None = None,
         max_commit_retries: int = 0,
     ) -> MergeStats:
-        """Fold delta files into the base (mor -> read-optimized).
+        """MAJOR compaction: fold each bucket's base + runs + raw deltas
+        into a new base (merge-on-read -> read-optimized).
 
-        Reads base+delta for every bucket whose delta stack is at least
-        ``min_depth`` deep, LWW-reduces, and rewrites those buckets; other
-        buckets carry forward untouched. ``min_depth=1`` (default) folds
-        everything; the ingest pipeline passes its compact threshold so a
-        SKEWED feed that drives one hot bucket to the threshold doesn't
-        trigger a rewrite of every cold bucket's base — write
+        Reads base+delta for every bucket with a non-empty delta stack,
+        LWW-reduces, and rewrites those buckets; other buckets carry
+        forward untouched. Tombstones are RETAINED in the compacted base so
+        late lower-lsn events still cannot resurrect deleted keys.
+
+        ``buckets``: explicit bucket set to fold; buckets with nothing
+        stacked are skipped. The pipeline's policy passes only the buckets
+        that earned a major, so a SKEWED feed that drives one hot bucket to
+        the threshold doesn't rewrite every cold bucket's base (write
         amplification that at 4096 buckets would turn one hot key into a
-        full-table rewrite. Cold buckets keep their (bounded, below-
-        threshold) delta stacks until they earn their own fold.
-        Tombstones are RETAINED in the compacted base so late lower-lsn
-        events still cannot resurrect deleted keys.
+        full-table rewrite), and a SHARDED major bounds the rewrite to a
+        slice of the table so the worst compaction pause scales with shard
+        size, not table size.
 
         ``cluster_by``/``max_rows_per_file`` (Delta ``OPTIMIZE``-with-
         clustering analogue): sort each bucket's rows by ``cluster_by``
@@ -711,11 +694,6 @@ class ParquetLakeTable(LakeTable):
         data — without clustering every base file spans the table's whole
         ts range and stats can exclude nothing.
 
-        ``buckets``: explicit bucket set to fold (a SHARDED major — the
-        caller bounds the rewrite to a slice of the table so the worst
-        compaction pause scales with shard size, not table size); buckets
-        with nothing stacked are skipped. Overrides ``min_depth``.
-
         ``max_commit_retries``: conflict budget for CONCURRENT-writer
         deployments (a background compactor racing the ingest writer).
         Each lost manifest race first tries a METADATA-LEVEL rebase — a
@@ -724,116 +702,22 @@ class ParquetLakeTable(LakeTable):
         top of the winner's manifest, no Spark recompute — and only falls
         back to recomputing the whole fold when the winner invalidated it
         (rewrote a touched bucket's base, folded the same deltas,
-        rebucketted, changed mode). 0 (default) preserves the
-        single-writer behavior: surface the conflict."""
-        budget = [max_commit_retries]
-        while True:
-            try:
-                return self._compact_once(
-                    cluster_by, max_rows_per_file, min_depth, buckets, budget
-                )
-            except CommitConflictError:
-                if budget[0] <= 0:
-                    raise
-                budget[0] -= 1
-
-    def _compact_once(
-        self,
-        cluster_by: str | None,
-        max_rows_per_file: int | None,
-        min_depth: int,
-        buckets: list[int] | None,
-        budget: list[int],
-    ) -> MergeStats:
-        m = self.manifest()
-        deltas: dict = m.get("deltas") or {}
-        if buckets is not None:
-            want = {int(b) for b in buckets}
-            touched = sorted(
-                int(b) for b, fl in deltas.items() if int(b) in want and fl
-            )
-        else:
-            touched = sorted(
-                int(b) for b, fl in deltas.items() if len(fl) >= max(1, min_depth)
-            )
-        if not touched:
-            return MergeStats(batch_id=None, skipped=True, version=m["version"])
-        key_cols = m["key_cols"]
-        physical = self._physical_schema(
-            T.StructType.fromJson(json.loads(m["schema"]))
-        )
-        files = [
-            f
-            for b in touched
-            for f in (m["buckets"].get(str(b), []) + deltas.get(str(b), []))
-        ]
-        combined = (
-            self._read_files(files, physical)
-            .withColumn("_bucket", _bucket_expr(key_cols[0], m["n_buckets"]))
-            .repartition(max(len(touched), 1), "_bucket")
-        )
-        # _bucket in the grouping keys → the repartition above satisfies the
-        # aggregate's distribution: one shuffle total, reducers co-located
-        # with the bucket layout the write needs.
-        reduced = self._lww_reduce(combined, ["_bucket"] + key_cols)
-
-        version = m["version"] + 1
-        written = self._write_buckets(
-            reduced,
-            version,
-            m,
-            sort_cols=[cluster_by] if cluster_by else None,
-            max_rows_per_file=max_rows_per_file,
-        )
-        for b in touched:          # a bucket can dedup to zero files only if
-            written.setdefault(b, [])  # it held tombstone-free dups — keep key
-        new_manifest = dict(m)
-        new_manifest["version"] = version
-        new_manifest["buckets"] = {**m["buckets"], **{str(b): fl for b, fl in written.items()}}
-        new_manifest["deltas"] = {
-            b: [] if int(b) in set(touched) else fl for b, fl in deltas.items()
-        }
-        # run files folded into the base stop being runs
-        still_delta = {f for fl in new_manifest["deltas"].values() for f in fl}
-        old_runs = m.get("run_files") or []
-        new_manifest["run_files"] = [f for f in old_runs if f in still_delta]
-        fresh_stats = self._collect_file_stats(written)
-        new_manifest["file_stats"] = self._carry_stats(
-            m, new_manifest["buckets"], new_manifest["deltas"], fresh_stats
-        )
-        commit_entry = {
-            "batch_id": None,
-            "offset_range": None,
-            "buckets_rewritten": touched,
-            "rows_in": 0,
-            "deletes_in": 0,
-            "schema_changed": False,
-            "compaction": True,
-        }
-        new_manifest["commits"] = (m.get("commits") or [])[-99:] + [commit_entry]
-        version = self._commit_compaction(
-            new_manifest,
-            m,
-            touched,
-            written,
-            folded={str(b): list(deltas.get(str(b), [])) for b in touched},
-            minor=False,
-            commit_entry=commit_entry,
-            written_stats=fresh_stats,
-            budget=budget,
-        )
-        return MergeStats(batch_id=None, version=version, buckets_touched=len(touched))
+        rebucketted). 0 (default) preserves the single-writer behavior:
+        surface the conflict."""
+        return self._fold(buckets, minor=False,
+                          max_commit_retries=max_commit_retries,
+                          cluster_by=cluster_by,
+                          max_rows_per_file=max_rows_per_file)
 
     def compact_minor(
         self,
-        min_depth: int = 1,
         buckets: list[int] | None = None,
         max_commit_retries: int = 0,
     ) -> MergeStats:
-        """LSM-style MINOR compaction: fold each qualifying bucket's RAW
-        delta stack (the per-batch appends) into one collapsed RUN file —
-        without reading or rewriting the base. ``compact()`` is the major
-        sibling that folds base+runs+raw.
+        """LSM-style MINOR compaction: fold each bucket's RAW delta stack
+        (the per-batch appends) into one collapsed RUN file — without
+        reading or rewriting the base. ``buckets`` restricts the fold as in
+        :meth:`compact`, the major sibling that folds base+runs+raw.
 
         Why two levels at 10^10 events: a major compaction's cost is
         dominated by re-writing the bucket's whole base, so running it
@@ -853,7 +737,7 @@ class ParquetLakeTable(LakeTable):
         Run files are ordinary delta files to every reader (``read``,
         ``lookup``, ``scan``, ``table_changes``, ``expire_versions`` all
         see them in ``deltas``); the manifest's ``run_files`` list only
-        marks which delta entries are runs, so the triggers can count raw
+        marks which delta entries are runs, so the policy can count raw
         vs run depth separately. The commit is flagged ``compaction`` +
         ``minor`` so change readers treat the re-referenced rows like any
         compaction rewrite.
@@ -862,140 +746,118 @@ class ParquetLakeTable(LakeTable):
         :meth:`compact` (a minor's rebase needs no base-equality check —
         it never touches the base; only the folded raws must still be
         referenced by the winner)."""
-        budget = [max_commit_retries]
-        while True:
-            try:
-                return self._compact_minor_once(min_depth, buckets, budget)
-            except CommitConflictError:
-                if budget[0] <= 0:
-                    raise
-                budget[0] -= 1
+        return self._fold(buckets, minor=True,
+                          max_commit_retries=max_commit_retries)
 
-    def _compact_minor_once(
-        self, min_depth: int, buckets: list[int] | None, budget: list[int]
-    ) -> MergeStats:
-        m = self.manifest()
-        deltas: dict = m.get("deltas") or {}
-        run_files = set(m.get("run_files") or [])
-        raw = {
-            b: [f for f in fl if f not in run_files] for b, fl in deltas.items()
-        }
-        if buckets is not None:
-            want = {int(b) for b in buckets}
-            touched = sorted(
-                int(b) for b, fl in raw.items() if int(b) in want and fl
-            )
-        else:
-            touched = sorted(
-                int(b) for b, fl in raw.items() if len(fl) >= max(1, min_depth)
-            )
-        if not touched:
-            return MergeStats(batch_id=None, skipped=True, version=m["version"])
-        key_cols = m["key_cols"]
-        physical = self._physical_schema(
-            T.StructType.fromJson(json.loads(m["schema"]))
-        )
-        files = [f for b in touched for f in raw[str(b)]]
-        combined = (
-            self._read_files(files, physical)
-            .withColumn("_bucket", _bucket_expr(key_cols[0], m["n_buckets"]))
-            .repartition(max(len(touched), 1), "_bucket")
-        )
-        reduced = self._lww_reduce(combined, ["_bucket"] + key_cols)
-
-        version = m["version"] + 1
-        written = self._write_buckets(reduced, version, m)
-        new_deltas = dict(deltas)
-        new_runs = set(run_files)
-        for b in touched:
-            sb = str(b)
-            kept_runs = [f for f in deltas.get(sb, []) if f in run_files]
-            fresh = written.get(b, [])
-            new_deltas[sb] = kept_runs + fresh
-            new_runs.update(fresh)
-        still = {f for fl in new_deltas.values() for f in fl}
-        new_manifest = dict(m)
-        new_manifest["version"] = version
-        new_manifest["deltas"] = new_deltas
-        new_manifest["run_files"] = sorted(new_runs & still)
-        fresh_stats = self._collect_file_stats(written)
-        new_manifest["file_stats"] = self._carry_stats(
-            m, m["buckets"], new_deltas, fresh_stats
-        )
-        commit_entry = {
-            "batch_id": None,
-            "offset_range": None,
-            "buckets_rewritten": touched,
-            "rows_in": 0,
-            "deletes_in": 0,
-            "schema_changed": False,
-            "compaction": True,
-            "minor": True,
-        }
-        new_manifest["commits"] = (m.get("commits") or [])[-99:] + [commit_entry]
-        version = self._commit_compaction(
-            new_manifest,
-            m,
-            touched,
-            written,
-            folded={str(b): list(raw.get(str(b), [])) for b in touched},
-            minor=True,
-            commit_entry=commit_entry,
-            written_stats=fresh_stats,
-            budget=budget,
-        )
-        return MergeStats(batch_id=None, version=version, buckets_touched=len(touched))
-
-    def _commit_compaction(
+    def _fold(
         self,
-        new_manifest: dict,
-        m_orig: dict,
-        touched: list[int],
-        written: dict[int, list[str]],
-        folded: dict[str, list[str]],
+        buckets: list[int] | None,
         minor: bool,
-        commit_entry: dict,
-        written_stats: dict[str, dict],
-        budget: list[int],
-    ) -> int:
-        """Commit a compaction manifest; on a lost race, RE-BASE on the
-        winner's manifest at the METADATA level — no Spark recompute.
+        max_commit_retries: int,
+        cluster_by: str | None = None,
+        max_rows_per_file: int | None = None,
+    ) -> MergeStats:
+        """The one fold body behind :meth:`compact` and
+        :meth:`compact_minor`: read -> LWW reduce -> bucketed write ->
+        manifest -> commit. A major reads base + every delta and replaces
+        the base; a minor reads the raw deltas only and appends their
+        reduction as one run per bucket.
 
-        Soundness: the LWW reduce is an argmax under a total order, so a
-        fold of a file set S is valid against ANY manifest that still
-        references exactly S for those buckets plus newer deltas on top
-        (the newer deltas override the folded result the same way they
-        overrode its inputs). A concurrent ingest commit only appends
-        delta files and never rewrites the base, so the rebase applies;
-        anything else (another compactor folded the same files, a
-        rebucket, a mode flip, snapshot expiry dropping a folded ref)
-        fails the validity check and surfaces CommitConflictError for the
-        caller's full-recompute loop. Each rebase consumes one unit of the
-        shared ``budget``; at 0 the conflict surfaces to the caller.
-
-        Returns the version actually committed."""
+        On a lost manifest race the fold RE-BASES on the winner's manifest
+        at the METADATA level — no Spark recompute (see
+        :meth:`_fold_manifest`). Soundness: the LWW reduce is an argmax
+        under a total order, so a fold of a file set S is valid against ANY
+        manifest that still references exactly S for those buckets plus
+        newer deltas on top (the newer deltas override the folded result
+        the same way they overrode its inputs). When the winner
+        invalidated the fold, it is recomputed from the winner's manifest.
+        Each rebase and each recompute spends one unit of
+        ``max_commit_retries``; at 0 the conflict surfaces."""
+        budget = max_commit_retries
+        want = None if buckets is None else {int(b) for b in buckets}
         while True:
-            try:
-                self._commit(new_manifest)
-                return new_manifest["version"]
-            except CommitConflictError:
-                if budget[0] <= 0:
-                    self._delete_attempt_files(written)
-                    raise
-                budget[0] -= 1
-                m2 = self.manifest()
-                rebased = self._rebase_compaction_manifest(
-                    m2, m_orig, touched, written, folded, minor,
-                    commit_entry, written_stats,
+            m = self.manifest()
+            runs = set(m.get("run_files") or [])
+            folded = {
+                b: [f for f in fl if not (minor and f in runs)]
+                for b, fl in (m.get("deltas") or {}).items()
+                if want is None or int(b) in want
+            }
+            touched = sorted(int(b) for b, fl in folded.items() if fl)
+            if not touched:
+                return MergeStats(batch_id=None, skipped=True, version=m["version"])
+            folded = {str(b): folded[str(b)] for b in touched}
+            key_cols = m["key_cols"]
+            physical = self._physical_schema(
+                T.StructType.fromJson(json.loads(m["schema"]))
+            )
+            files = [
+                f
+                for b in touched
+                for f in (
+                    ([] if minor else m["buckets"].get(str(b), []))
+                    + folded[str(b)]
                 )
-                if rebased is None:
-                    self._delete_attempt_files(written)
-                    raise
-                new_manifest = rebased
+            ]
+            combined = (
+                self._read_files(files, physical)
+                .withColumn("_bucket", _bucket_expr(key_cols[0], m["n_buckets"]))
+                .repartition(len(touched), "_bucket")
+            )
+            # _bucket in the grouping keys → the repartition above satisfies
+            # the aggregate's distribution: one shuffle total, reducers
+            # co-located with the bucket layout the write needs.
+            reduced = self._lww_reduce(combined, ["_bucket"] + key_cols)
+            written = self._write_buckets(
+                reduced,
+                m["version"] + 1,
+                m,
+                sort_cols=[cluster_by] if cluster_by else None,
+                max_rows_per_file=max_rows_per_file,
+            )
+            fresh_stats = self._collect_file_stats(written)
+            commit_entry = {
+                "batch_id": None,
+                "offset_range": None,
+                "buckets_rewritten": touched,
+                "rows_in": 0,
+                "deletes_in": 0,
+                "schema_changed": False,
+                "compaction": True,
+            }
+            if minor:
+                commit_entry["minor"] = True
+            new_manifest = self._fold_manifest(
+                m, m, touched, written, folded, minor, commit_entry, fresh_stats
+            )
+            while new_manifest is not None:
+                try:
+                    self._commit(new_manifest)
+                    return MergeStats(
+                        batch_id=None,
+                        version=new_manifest["version"],
+                        buckets_touched=len(touched),
+                    )
+                except CommitConflictError:
+                    if budget <= 0:
+                        self._delete_attempt_files(written)
+                        raise
+                    budget -= 1
+                    new_manifest = self._fold_manifest(
+                        self.manifest(), m, touched, written, folded, minor,
+                        commit_entry, fresh_stats,
+                    )
+            # the winner invalidated this fold: recompute against its manifest
+            self._delete_attempt_files(written)
+            if budget <= 0:
+                raise CommitConflictError(
+                    f"a concurrent commit invalidated the fold of buckets {touched}"
+                )
+            budget -= 1
 
-    def _rebase_compaction_manifest(
+    def _fold_manifest(
         self,
-        m2: dict,
+        base: dict,
         m_orig: dict,
         touched: list[int],
         written: dict[int, list[str]],
@@ -1004,48 +866,48 @@ class ParquetLakeTable(LakeTable):
         commit_entry: dict,
         written_stats: dict[str, dict],
     ) -> dict | None:
-        """Rebuild a compaction commit on top of the WINNER's manifest
-        ``m2``, or None when the concurrent commit invalidated the fold
-        (see ``_commit_compaction``). The winner's schema/last_batch_id/
-        commit history are carried verbatim — compaction changes file
-        layout only. Files this attempt wrote were shaped to ``m_orig``'s
-        schema; readers fill columns the winner added since with typed
-        nulls (the same contract old delta files rely on after any
-        evolution)."""
-        if (
-            m2.get("n_buckets") != m_orig.get("n_buckets")
-            or m2.get("mode") != m_orig.get("mode")
-        ):
+        """The manifest a fold commits: ``base`` with each touched bucket's
+        ``folded`` files swapped for the ``written`` ones. ``base`` is the
+        manifest the fold read (``m_orig``) on the first attempt and the
+        WINNER's after a lost race. None when the winner invalidated the
+        fold: a rebucket, a major rewrote a base this major read, or a
+        folded delta is gone (compacted or expired). The winner's
+        schema/last_batch_id/commit history are carried verbatim —
+        compaction changes file layout only. Files this attempt wrote were
+        shaped to ``m_orig``'s schema; readers fill columns the winner
+        added since with typed nulls (the same contract old delta files
+        rely on after any evolution)."""
+        if base.get("n_buckets") != m_orig.get("n_buckets"):
             return None
-        deltas2 = {b: list(fl) for b, fl in (m2.get("deltas") or {}).items()}
-        buckets2 = dict(m2.get("buckets") or {})
+        deltas = {b: list(fl) for b, fl in (base.get("deltas") or {}).items()}
+        buckets = dict(base.get("buckets") or {})
         orig_buckets = m_orig.get("buckets") or {}
         for b in touched:
             sb = str(b)
-            if not minor and buckets2.get(sb, []) != orig_buckets.get(sb, []):
+            if not minor and buckets.get(sb, []) != orig_buckets.get(sb, []):
                 return None  # the base this fold rewrote changed under it
-            if not set(folded.get(sb, ())) <= set(deltas2.get(sb, ())):
+            if not set(folded.get(sb, ())) <= set(deltas.get(sb, ())):
                 return None  # a folded delta is gone (compacted/expired)
-        runs2 = set(m2.get("run_files") or [])
+        runs = set(base.get("run_files") or [])
         for b in touched:
             sb = str(b)
             fold_b = set(folded.get(sb, ()))
             fresh = written.get(b, [])
-            remaining = [f for f in deltas2.get(sb, []) if f not in fold_b]
+            remaining = [f for f in deltas.get(sb, []) if f not in fold_b]
             if minor:
-                deltas2[sb] = remaining + fresh
-                runs2.update(fresh)
+                deltas[sb] = remaining + fresh
+                runs.update(fresh)
             else:
-                buckets2[sb] = fresh
-                deltas2[sb] = remaining
-        still = {f for fl in deltas2.values() for f in fl}
-        nm = dict(m2)
-        nm["version"] = m2["version"] + 1
-        nm["buckets"] = buckets2
-        nm["deltas"] = deltas2
-        nm["run_files"] = sorted(runs2 & still)
-        nm["file_stats"] = self._carry_stats(m2, buckets2, deltas2, written_stats)
-        nm["commits"] = (m2.get("commits") or [])[-99:] + [commit_entry]
+                buckets[sb] = fresh
+                deltas[sb] = remaining
+        still = {f for fl in deltas.values() for f in fl}
+        nm = dict(base)
+        nm["version"] = base["version"] + 1
+        nm["buckets"] = buckets
+        nm["deltas"] = deltas
+        nm["run_files"] = sorted(runs & still)
+        nm["file_stats"] = self._carry_stats(base, buckets, deltas, written_stats)
+        nm["commits"] = (base.get("commits") or [])[-99:] + [commit_entry]
         return nm
 
     def rebucket(self, new_n_buckets: int) -> MergeStats:
@@ -1430,7 +1292,6 @@ class ParquetLakeTable(LakeTable):
 
         key_cols: list[str] = m["key_cols"]
         n_buckets: int = m["n_buckets"]
-        mode: str = m.get("mode", "cow")
         old_user = T.StructType.fromJson(json.loads(m["schema"]))
         version = m["version"] + 1
 
@@ -1441,7 +1302,6 @@ class ParquetLakeTable(LakeTable):
         ]
         new_user = evolve_schema(old_user, T.StructType(payload_fields))
         schema_changed = new_user != old_user
-        physical = self._physical_schema(new_user)
 
         conv_key = key_cols[0]
         n_parts = max(1, len(touched_buckets) if touched_buckets else n_buckets)
@@ -1495,64 +1355,19 @@ class ParquetLakeTable(LakeTable):
                 "deletes_in": hint_row["deletes_in"] or 0,
             }
 
-        if mode == "mor":
-            # 3m. append the deduped batch as delta files — O(batch) write,
-            # no read of existing data at all. Touched buckets are known
-            # EXACTLY from the files the write produced (listed via the FS
-            # API) — no extra distinct() job, no driver-local listdir.
-            written = self._write_buckets(shaped, version, m)
-            touched = sorted(written)
-            if not touched:
-                # empty write — _write_buckets already removed its dir
-                return self._commit_noop(m, version, batch_id, last)
-            new_deltas = {b: list(fl) for b, fl in (m.get("deltas") or {}).items()}
-            for b, files in written.items():
-                new_deltas.setdefault(str(b), [])
-                new_deltas[str(b)].extend(files)
-            new_buckets = dict(m["buckets"])
-        else:
-            # 3c. copy-on-write: read ONLY touched buckets, reduce, rewrite.
-            # Requires the touched set up front (to know what to read): use
-            # the pipeline's hint or one bounded distinct (<= n_buckets ints).
-            if touched_buckets is not None:
-                touched = sorted(touched_buckets)
-            else:
-                touched = sorted(
-                    r[0]
-                    for r in updates.select(
-                        _bucket_expr(conv_key, n_buckets).alias("_b")
-                    ).distinct().collect()
-                )
-            if not touched:
-                return self._commit_noop(m, version, batch_id, last)
-            old_physical = self._physical_schema(old_user)
-            touched_files = [
-                f
-                for b in touched
-                for f in (
-                    m["buckets"].get(str(b), [])
-                    + (m.get("deltas") or {}).get(str(b), [])
-                )
-            ]
-            if touched_files:
-                target = self._read_files(touched_files, old_physical)
-                target = align_to_schema(target, physical)
-                target = target.withColumn("_bucket", _bucket_expr(conv_key, n_buckets))
-                combined = target.unionByName(shaped)
-            else:
-                combined = shaped
-            combined = combined.repartition(max(len(touched), 1), "_bucket")
-            final = self._lww_reduce(combined, ["_bucket"] + key_cols)
-            written = self._write_buckets(final, version, m)
-            new_buckets = dict(m["buckets"])
-            for b in touched:
-                new_buckets[str(b)] = written.get(b, [])
-            # the touched buckets' deltas were just folded into the new base:
-            # drop them so their rows aren't referenced twice
-            new_deltas = {
-                b: ([] if int(b) in set(touched) else list(fl))
-                for b, fl in (m.get("deltas") or {}).items()
-            }
+        # 3. append the deduped batch as delta files — O(batch) write, no
+        # read of existing data at all. Touched buckets are known EXACTLY
+        # from the files the write produced (listed via the FS API) — no
+        # extra distinct() job, no driver-local listdir.
+        written = self._write_buckets(shaped, version, m)
+        touched = sorted(written)
+        if not touched:
+            # empty write — _write_buckets already removed its dir
+            return self._commit_noop(m, version, batch_id, last)
+        new_deltas = {b: list(fl) for b, fl in (m.get("deltas") or {}).items()}
+        for b, files in written.items():
+            new_deltas.setdefault(str(b), [])
+            new_deltas[str(b)].extend(files)
 
         observed_bytes = None
         if post_write_stats is not None:
@@ -1583,16 +1398,15 @@ class ParquetLakeTable(LakeTable):
             "schema": json.dumps(new_user.jsonValue()),
             "key_cols": key_cols,
             "n_buckets": n_buckets,
-            "mode": mode,
             "last_batch_id": batch_id if batch_id is not None else last,
-            "buckets": new_buckets,
+            "buckets": m["buckets"],
             "deltas": new_deltas,
             # minor-compaction run markers survive unrelated merges
             "run_files": [
                 f for f in (m.get("run_files") or []) if f in still_delta
             ],
             "file_stats": self._carry_stats(
-                m, new_buckets, new_deltas, self._collect_file_stats(written)
+                m, m["buckets"], new_deltas, self._collect_file_stats(written)
             ),
             "commits": (m.get("commits") or [])[-99:] + [commit_info],
         }

@@ -26,11 +26,15 @@ process-agnostic, it races through the filesystem).
 
 from __future__ import annotations
 
+import contextlib
 import threading
 import time
 from dataclasses import dataclass, field
 
 from xgeo_spark.sinks.parquet_lake import CommitConflictError, ParquetLakeTable
+from xgeo_spark.streaming.pipeline import select_compaction
+
+_POOL = "spark.scheduler.pool"
 
 
 @dataclass
@@ -43,13 +47,14 @@ class CompactorStats:
 
 
 class BackgroundCompactor:
-    """Polls a MoR table's per-bucket run depth and majors ripe buckets.
+    """Polls a MoR table's per-bucket run depth and majors ripe buckets,
+    chosen by the pipeline's policy (``pipeline.select_compaction`` with
+    ``background_major``).
 
     ``major_every``: a bucket is ripe once it has banked this many minor
-    runs (the same read-amplification budget the inline trigger used).
-    ``major_shards``: cap per major at ceil(n_buckets/shards) buckets,
-    deepest-first — bounds each Spark job so one poll never turns into a
-    full-table rewrite.
+    runs. ``major_shards``: cap per major at ceil(n_buckets/shards)
+    buckets, deepest-first — bounds each Spark job so one poll never turns
+    into a full-table rewrite.
     """
 
     def __init__(
@@ -73,15 +78,14 @@ class BackgroundCompactor:
     # ---------- one decision + fold ----------
 
     def ripe_buckets(self) -> list[int]:
-        depths = self.table.bucket_depths()
-        ripe = [b for b, (_, runs) in depths.items() if runs >= self.major_every]
-        if not ripe:
-            return []
-        n_buckets = self.table.manifest()["n_buckets"]
-        cap = max(1, -(-n_buckets // self.major_shards))
-        if len(ripe) > cap:
-            ripe = sorted(ripe, key=lambda b: (-depths[b][1], b))[:cap]
-        return sorted(ripe)
+        m = self.table.manifest()
+        majors, _ = select_compaction(
+            self.table.bucket_depths(m), m["n_buckets"], m["version"],
+            # the threshold only shapes the ingest writer's minors
+            compact_threshold=1, major_every=self.major_every,
+            major_shards=self.major_shards, background_major=True,
+        )
+        return majors
 
     def run_once(self) -> int:
         """One poll: major the ripe buckets (if any). Returns buckets
@@ -107,29 +111,34 @@ class BackgroundCompactor:
 
     # ---------- thread lifecycle ----------
 
-    def _loop(self) -> None:
-        # all compaction jobs ride the low-weight "maintenance" scheduler
-        # pool (xgeo_spark/conf/fairscheduler.xml via session.py): under
-        # FAIR mode an in-flight major shares task slots with ingest at
-        # 1:4 instead of parking ingest behind it FIFO. Thread-local, so
-        # only this thread's jobs are tagged.
+    @contextlib.contextmanager
+    def _maintenance_pool(self):
+        """Run the block's jobs in the low-weight "maintenance" scheduler
+        pool (xgeo_spark/conf/fairscheduler.xml via session.py): under FAIR
+        mode an in-flight major shares task slots with ingest at 1:4
+        instead of parking ingest behind it FIFO. The pool is a
+        thread-local property; the thread's previous pool is restored."""
+        sc = self.table.spark.sparkContext
+        prev = sc.getLocalProperty(_POOL)
+        sc.setLocalProperty(_POOL, "maintenance")
         try:
-            self.table.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "maintenance"
-            )
-        except Exception:  # noqa: BLE001 — scheduling is best-effort
-            pass
-        while not self._stop.is_set():
-            try:
-                if self.run_once() == 0:
+            yield
+        finally:
+            sc.setLocalProperty(_POOL, prev)
+
+    def _loop(self) -> None:
+        with self._maintenance_pool():
+            while not self._stop.is_set():
+                try:
+                    if self.run_once() == 0:
+                        self._stop.wait(self.poll_seconds)
+                except FileNotFoundError:
+                    # table not created yet — keep polling
                     self._stop.wait(self.poll_seconds)
-            except FileNotFoundError:
-                # table not created yet — keep polling
-                self._stop.wait(self.poll_seconds)
-            except BaseException as e:  # noqa: BLE001 — surfaced in stop()
-                self.stats.errors += 1
-                self._error = e
-                return
+                except BaseException as e:  # noqa: BLE001 — surfaced in stop()
+                    self.stats.errors += 1
+                    self._error = e
+                    return
 
     def start(self) -> "BackgroundCompactor":
         if self._thread is not None:
@@ -147,8 +156,9 @@ class BackgroundCompactor:
 
     def stop(self, drain: bool = True, timeout: float = 600.0) -> CompactorStats:
         """Stop the loop. ``drain=True`` runs one final fold pass after
-        the thread exits so a table left with ripe buckets at shutdown is
-        read-optimized. Re-raises any error the thread died on."""
+        the thread exits, in the maintenance pool like the loop's, so a
+        table left with ripe buckets at shutdown is read-optimized.
+        Re-raises any error the thread died on."""
         self._stop.set()
         if self._thread is not None:
             self._thread.join(timeout)
@@ -156,7 +166,8 @@ class BackgroundCompactor:
         if self._error is not None:
             raise self._error
         if drain:
-            self.run_once()
+            with self._maintenance_pool():
+                self.run_once()
         return self.stats
 
     def __enter__(self) -> "BackgroundCompactor":

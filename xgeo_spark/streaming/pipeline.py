@@ -39,6 +39,51 @@ TRANSCRIPT_SCHEMA = T.StructType(
 KEY_COLS = ["conv_id", "turn_idx"]
 
 
+def select_compaction(
+    bucket_depths: dict[int, tuple[int, int]],
+    n_buckets: int,
+    version: int,
+    compact_threshold: int,
+    major_every: int,
+    major_shards: int,
+    background_major: bool,
+) -> tuple[list[int], list[int]]:
+    """The one compaction policy: ``(majors, minors)`` — the buckets to
+    major and to minor — from a manifest's per-bucket ``(raw, runs)``
+    depths (``ParquetLakeTable.bucket_depths``), its bucket count and its
+    version. Pure: the inline trigger, the BackgroundCompactor's poll and
+    its drain all decide through it.
+
+    A bucket is DUE once it stacks ``compact_threshold`` raw deltas.
+    Inline, a due bucket that has also banked ``major_every - 1`` runs is
+    RIPE and majors; the other due buckets minor. Decisions are per
+    bucket: a cold bucket parked below the threshold neither forces a
+    major nor is dragged into one. With ``background_major`` every due
+    bucket minors (the ingest writer folds only those) and every bucket
+    that banked ``major_every`` runs majors (the compactor folds only
+    those).
+
+    ``major_shards`` caps the majors at ceil(n_buckets / major_shards):
+    deepest run stacks first, so a deferred bucket gains priority every
+    cycle it waits, ties rotated by ``version`` so the choice is
+    round-robin when depths are uniform. Inline, a ripe bucket over the
+    cap minors this cycle instead."""
+    due = [b for b, (raw, _) in bucket_depths.items() if raw >= compact_threshold]
+    if background_major:
+        ripe = [b for b, (_, runs) in bucket_depths.items() if runs >= major_every]
+    else:
+        ripe = [b for b in due if bucket_depths[b][1] >= major_every - 1]
+    cap = max(1, -(-n_buckets // max(1, major_shards)))
+    if len(ripe) > cap:
+        cursor = version % n_buckets
+        ripe = sorted(
+            ripe, key=lambda b: (-bucket_depths[b][1], (b - cursor) % n_buckets)
+        )[:cap]
+    chosen = set(ripe)
+    minors = sorted(b for b in due if background_major or b not in chosen)
+    return sorted(ripe), minors
+
+
 @dataclass
 class IngestConfig:
     n_buckets: int = 64
@@ -46,44 +91,35 @@ class IngestConfig:
     normalize_text: bool = False
     lineage: bool = True
     quarantine_dir: str | None = None
-    # merge strategy for tables THIS pipeline creates: "mor" keeps ingest
-    # O(batch) (deltas appended, compacted when any bucket stacks more than
-    # compact_threshold generations); "cow" rewrites touched buckets per
-    # batch (read-optimized). See sinks/parquet_lake.py.
-    merge_mode: str = "mor"
+    # The one compaction cadence (``select_compaction`` below), decided per
+    # bucket on merge-on-read tables: a bucket that stacks compact_threshold
+    # RAW deltas is due. A due bucket that has also banked major_every - 1
+    # RUN files gets a MAJOR (base + runs + raw -> new base, O(base));
+    # the others get a MINOR (raw -> one collapsed run, base untouched,
+    # O(delta window)). The base rewrite amortizes over
+    # major_every*compact_threshold batches while read depth stays bounded
+    # at base + major_every runs + compact_threshold raw generations
+    # (measured +42% sustained ingest over always-major on the identical
+    # 105M-event feed, worst pause halved; BASELINE.md). major_every=1 is
+    # the always-major setting: unsharded, every due bucket majors and no
+    # run is ever written (fewest generations on disk, for read-dominated
+    # tables).
     compact_threshold: int = 8
-    # two-level (LSM minor/major) compaction: when any bucket stacks
-    # compact_threshold RAW deltas, fold them into one collapsed RUN file
-    # (base untouched, O(delta window)); only after major_every runs pile
-    # up does a MAJOR compaction fold base+runs+raw (O(base)). Amortizes
-    # the base rewrite over major_every*compact_threshold batches instead
-    # of compact_threshold, while read depth stays bounded at
-    # base + major_every runs + compact_threshold raw generations.
-    # Default ON: measured +42% sustained ingest on the identical
-    # 105M-event feed with the worst pause halved, and exact-oracle
-    # equality at 10^8 and 10^9 events (BASELINE.md). Set False for the
-    # single-level always-major cadence (fewest delta generations on
-    # disk, best for read-dominated tables).
-    minor_compaction: bool = True
     major_every: int = 4
     # bound the MAJOR-compaction pause: at most ceil(n_buckets/major_shards)
     # buckets are base-rewritten per trigger (highest run-depth first, ties
     # rotated by version for round-robin fairness); buckets over the cap are
     # minor-folded this cycle and majored in a later one. Worst pause then
     # scales with shard size, not table size — at a 10^10-key base an
-    # unsharded major is a minutes-long stall. Run depth stays bounded at
-    # ~(major_every - 1 + major_shards) because deferred buckets gain
-    # priority each cycle they wait. 1 = unsharded (rewrite every ripe
-    # bucket at once, the pre-r4 cadence).
+    # unsharded major is a minutes-long stall. 1 = unsharded.
     major_shards: int = 1
     # hand MAJOR compaction to a concurrent maintenance writer
-    # (streaming/compactor.BackgroundCompactor): ingest then only ever
-    # minor-folds (O(delta window)) and its worst pause drops to that
-    # floor; base rewrites happen on the compactor's thread/process via
-    # the optimistic-retry commit. The pipeline does NOT start the
-    # compactor itself (it may live in another process) — this flag only
-    # stops ingest from majoring inline and arms the conflict-retry
-    # budget on its minor folds.
+    # (streaming/compactor.BackgroundCompactor, which majors a bucket once
+    # it banks major_every runs): ingest then only ever minor-folds its due
+    # buckets and its worst pause drops to that floor. The pipeline does
+    # NOT start the compactor itself (it may live in another process) —
+    # this flag only stops ingest from majoring inline and arms the
+    # conflict-retry budget on its minor folds.
     background_major: bool = False
     # op-'P' partial images ("null means unchanged"): squashed into full
     # rows at ingest via a bucket-pruned read-modify-write
@@ -126,12 +162,7 @@ class CDCIngestPipeline:
         if self.config.checkpoint_dir:
             spark.sparkContext.setCheckpointDir(self.config.checkpoint_dir)
         if not table.exists():
-            create_kwargs = {"n_buckets": self.config.n_buckets}
-            from xgeo_spark.sinks.parquet_lake import ParquetLakeTable
-
-            if isinstance(table, ParquetLakeTable):
-                create_kwargs["mode"] = self.config.merge_mode
-            table.create(TRANSCRIPT_SCHEMA, KEY_COLS, **create_kwargs)
+            table.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=self.config.n_buckets)
 
     # ---------- the one batch applier ----------
 
@@ -282,67 +313,32 @@ class CDCIngestPipeline:
         }
 
     def _maybe_compact(self, stats: MergeStats) -> None:
-        # amortized read-cost control for merge-on-read tables: fold deltas
-        # into the base once any bucket stacks compact_threshold generations.
-        # Runs AFTER the idempotent commit, as its own version — a crash
-        # between commit and compaction loses nothing (the next batch just
+        # amortized read-cost control for merge-on-read tables. Runs AFTER
+        # the idempotent commit, as its own version(s) — a crash between
+        # commit and compaction loses nothing (the next batch just
         # compacts instead).
         from xgeo_spark.sinks.parquet_lake import ParquetLakeTable
 
-        if (
-            stats.skipped
-            or not isinstance(self.table, ParquetLakeTable)
-            or self.table.manifest().get("mode") != "mor"
-        ):
+        if stats.skipped or not isinstance(self.table, ParquetLakeTable):
             return
-        threshold = self.config.compact_threshold
-        # with a concurrent compactor racing this writer, every inline
-        # fold needs a conflict budget (rebase is metadata-only; see
-        # sinks/parquet_lake._commit_compaction)
-        retries = 10 if self.config.background_major else 0
-        if self.config.background_major:
-            depths = self.table.bucket_depths()
-            due = [b for b, (raw, _) in depths.items() if raw >= threshold]
-            if due:
-                self.table.compact_minor(buckets=due, max_commit_retries=retries)
+        c = self.config
+        m = self.table.manifest()
+        majors, minors = select_compaction(
+            self.table.bucket_depths(m), m["n_buckets"], m["version"],
+            c.compact_threshold, c.major_every, c.major_shards,
+            c.background_major,
+        )
+        if c.background_major:
+            # majors are the BackgroundCompactor's; the minor races it, so
+            # it needs a conflict budget (the rebase is metadata-only; see
+            # sinks/parquet_lake._fold)
+            if minors:
+                self.table.compact_minor(buckets=minors, max_commit_retries=10)
             return
-        if not self.config.minor_compaction:
-            if self.table.delta_depth() >= threshold:
-                # fold ONLY the buckets at/above threshold: under skew, one
-                # hot bucket must not force a rewrite of every cold bucket
-                self.table.compact(min_depth=threshold)
-            return
-        # Per-BUCKET decisions (not global maxima): a cold bucket parked at
-        # major_every-1 runs but below the raw threshold must neither turn
-        # every trigger into a major (the global-run_depth pathology) nor
-        # drag untouched buckets into a fold. Each bucket that has banked
-        # `threshold` raw generations is due; of those, the ones that also
-        # banked their run quota get a MAJOR (base+runs+raw), the rest a
-        # MINOR (raw -> one run).
-        depths = self.table.bucket_depths()
-        due = [b for b, (raw, _) in depths.items() if raw >= threshold]
-        if not due:
-            return
-        ripe = [b for b in due if depths[b][1] >= self.config.major_every - 1]
-        shards = max(1, self.config.major_shards)
-        if ripe and shards > 1:
-            n_buckets = self.table.manifest()["n_buckets"]
-            cap = max(1, -(-n_buckets // shards))
-            if len(ripe) > cap:
-                # deepest run stacks first so deferred buckets gain priority
-                # every cycle they wait; version-rotated tiebreak keeps the
-                # selection round-robin when depths are uniform
-                cursor = self.table.current_version() % max(n_buckets, 1)
-                ripe = sorted(
-                    ripe,
-                    key=lambda b: (-depths[b][1], (b - cursor) % n_buckets),
-                )[:cap]
-        ripe_set = set(ripe)
-        minor_only = [b for b in due if b not in ripe_set]
-        if ripe:
-            self.table.compact(buckets=ripe)
-        if minor_only:
-            self.table.compact_minor(buckets=minor_only)
+        if majors:
+            self.table.compact(buckets=majors)
+        if minors:
+            self.table.compact_minor(buckets=minors)
 
     def _apply_batch_single_job(
         self, good: DataFrame, batch_id: int | None, max_sv: int, n_bad: int
