@@ -173,3 +173,28 @@ def test_refine_trigger_and_fold(spark, ivf_setup):
     assert after == before
     # full-probe search is centroid-independent: identical post-refine
     assert _search_rows(spark, path, q, nprobe=8) == res_before
+
+
+def test_upsert_returns_row_counts_by_op(spark, tmp_path):
+    """``upserted`` counts the rows appended to cells; ``tombstoned`` only
+    the deletes (every row also lands in ``_moved``, but only 'D' rows
+    remove a vector). Without an op column nothing is a delete."""
+    rng = np.random.default_rng(5)
+    base = spark.createDataFrame(
+        [(i, _vec(rng, np.ones(DIM))) for i in range(8)], ["vec_id", "embedding"]
+    )
+    path = str(tmp_path / "ivf")
+    write_ivf_index(base, path, [[1.0] * DIM, [-1.0] * DIM], [1, 2])
+    rows = [(100, "I", 1, _vec(rng, -np.ones(DIM)))]
+    rows += [(i, "U", 2 + i, _vec(rng, -np.ones(DIM))) for i in range(3)]
+    rows += [(i, "D", 10 + i, [0.0] * DIM) for i in range(3, 5)]
+    df = spark.createDataFrame(rows, ["vec_id", "op", "lsn", "embedding"])
+    assert upsert_ivf_index(spark, path, df, op_col="op") == {
+        "upserted": 4, "tombstoned": 2,
+    }
+    assert read_ivf_live(spark, path).count() == 8 + 1 - 2
+    plain = spark.createDataFrame(
+        [(200 + i, 20 + i, _vec(rng, np.ones(DIM))) for i in range(3)],
+        ["vec_id", "lsn", "embedding"],
+    )
+    assert upsert_ivf_index(spark, path, plain) == {"upserted": 3, "tombstoned": 0}

@@ -30,8 +30,12 @@ from xgeo_spark.sinks.parquet_lake import ParquetLakeTable
 from xgeo_spark.streaming.pipeline import CDCIngestPipeline, IngestConfig
 
 KEYS = [("cA", 0), ("cA", 1), ("cB", 0), ("cB", 7), ("cC", 3)]
-# NFC-interesting: decomposed é, NBSP + runs of whitespace, empty, plain
-TEXTS = [None, "", "plain", "Café crema", "  a  b\n c  ", "x"]
+# NFC-interesting: decomposed é, NBSP + runs of whitespace, empty, plain,
+# a U+001F separator (str.split() whitespace, not Java's), a conjoining
+# jamo L+V+T run (NFC composes it to U+AC01) and ANGSTROM SIGN (NFC maps
+# it to U+00C5): every branch of the normalize_text_col gate
+TEXTS = [None, "", "plain", "Café crema", "  a  b\n c  ", "x",
+         "a\x1fb", "\u1100\u1161\u11a8", "\u212b"]
 TOOLS = [None, "search", "exec"]
 ROLES = ["user", "assistant", "tool"]
 BASE_TS = pd.Timestamp("2026-03-01 00:00:00")
@@ -181,3 +185,61 @@ def test_pipeline_matches_oracle_on_arbitrary_streams(spark, tmp_path_factory, r
     stats = pipe2.run_batch_replay(files_per_batch=raw["files_per_batch"])
     assert all(s.skipped for s in stats)
     assert table2.read().count() == len(exp)
+
+
+def _merge_plan(spark) -> tuple[dict[int, str], dict[int, int]]:
+    """Operator names and child -> parent edges of the last executed LWW
+    merge (the execution whose plan holds a ``max_by`` aggregate), read
+    from Spark's SQL status store."""
+    ss = spark._jsparkSession.sharedState().statusStore()
+    execs = ss.executionsList()
+    for k in range(execs.size() - 1, -1, -1):
+        g = ss.planGraph(execs.apply(k).executionId())
+        nodes = [g.allNodes().apply(i) for i in range(g.allNodes().size())]
+        if any("max_by" in n.desc() for n in nodes):
+            edges = [g.edges().apply(i) for i in range(g.edges().size())]
+            return (
+                {n.id(): n.name() for n in nodes},
+                {e.fromId(): e.toId() for e in edges},
+            )
+    raise AssertionError("no merge execution found")
+
+
+@pytest.mark.parametrize("single_job", [True, False])
+@pytest.mark.parametrize("normalize", [True, False])
+def test_normalization_runs_map_side_of_the_one_exchange(
+    spark, tmp_path, normalize, single_job
+):
+    """The merge plan on both apply paths (footer hint: one job with
+    observe; no hint: pre-aggregation pass first): with normalize_text on,
+    exactly one ArrowEvalPython, below the single Exchange, so the Python
+    crossing runs once per scan task; with it off, none."""
+    raw = {
+        "events": [
+            {"key": k % len(KEYS), "op": "U", "text": t, "tool": None,
+             "role": "user", "meta": None}
+            for k, t in enumerate(TEXTS * 3)
+        ],
+        "dups": [0, 1], "shuffle_seed": 7, "v2_cut_frac": 1.0,
+    }
+    arrived, _ = _build(raw)
+    feed = str(tmp_path / "feed")
+    _write_feed(feed, arrived, 2)
+    table = ParquetLakeTable(spark, str(tmp_path / "lake"))
+    pipe = CDCIngestPipeline(
+        spark, feed, table,
+        config=IngestConfig(n_buckets=4, lineage=False, normalize_text=normalize),
+    )
+    files = sorted(os.path.join(feed, f) for f in os.listdir(feed))
+    hint = pipe._sv_hint(files) if single_job else None
+    pipe.apply_batch(pipe.source.read_batch(files), 0, max_sv_hint=hint)
+
+    names, parent = _merge_plan(spark)
+    exchanges = [i for i, n in names.items() if n == "Exchange"]
+    pythons = [i for i, n in names.items() if n == "ArrowEvalPython"]
+    assert len(exchanges) == 1, names
+    assert len(pythons) == (1 if normalize else 0), names
+    for node in pythons:
+        while node in parent and node != exchanges[0]:
+            node = parent[node]
+        assert node == exchanges[0], names

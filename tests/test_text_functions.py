@@ -4,6 +4,10 @@
 
 from __future__ import annotations
 
+import unicodedata
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -11,7 +15,9 @@ from xgeo_spark.functions.text import (
     bpe_ish_token_count,
     doc_fingerprint,
     lang_id,
+    nfc_unstable_chars,
     normalize_text,
+    normalize_text_col,
     normalize_ws_col,
     quality_score,
     ws_token_count,
@@ -100,10 +106,68 @@ def test_fingerprint_ws_insensitive_order_aware(spark):
     assert got[0] != got[2]      # order-aware
 
 
-def test_normalize_ws_col_matches_udf_on_ascii(spark):
-    df = spark.createDataFrame([(" a  b ",), ("x\t\ny",)], ["text"])
+def _code_points():
+    return [cp for cp in range(0x110000) if not 0xD800 <= cp <= 0xDFFF]
+
+
+def _nfc_unstable_reference() -> set[int]:
+    """The gate set derived independently, one test per code point."""
+    out = set(range(0x1161, 0x1176)) | set(range(0x11A8, 0x11C3))  # V/T jamo
+    for cp in _code_points():
+        c = chr(cp)
+        if unicodedata.combining(c) or unicodedata.normalize("NFC", c) != c:
+            out.add(cp)
+        d = unicodedata.decomposition(c).split()
+        if len(d) == 2 and not d[0].startswith("<"):
+            out.add(int(d[1], 16))
+    return out
+
+
+def test_ws_col_helpers_match_udfs_on_every_isspace_code_point(spark):
+    """Every code point ``str.split()`` splits on, U+001C-U+001F included
+    (Java's ``(?U)\\s`` misses them), plus a few that look like space but
+    are not (ZWSP, MONGOLIAN VOWEL SEPARATOR, BOM)."""
+    cps = [cp for cp in _code_points() if chr(cp).isspace()]
+    cps += [0x200B, 0x180E, 0xFEFF]
+    texts = [t for cp in cps for t in ("a" + chr(cp) + "b", chr(cp) * 2 + "x" + chr(cp))]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
     rows = df.select(
-        normalize_text("text").alias("u"), normalize_ws_col(F.col("text")).alias("c")
+        "text",
+        normalize_ws_col(F.col("text")).alias("c"),
+        ws_token_count(F.col("text")).alias("udf_n"),
+        ws_token_count_col(F.col("text")).alias("col_n"),
     ).collect()
+    assert len(rows) == len(texts)
     for r in rows:
-        assert r["u"] == r["c"]
+        assert r["c"] == " ".join(r["text"].split()), [hex(ord(x)) for x in r["text"]]
+        assert r["col_n"] == r["udf_n"] == len(r["text"].split()), r
+
+
+def test_nfc_gate_set_matches_unicodedata():
+    assert set(map(ord, nfc_unstable_chars())) == _nfc_unstable_reference()
+
+
+def test_normalize_text_col_equals_udf_on_every_code_point(spark, tmp_path):
+    """Differential: ``normalize_text_col`` (JVM whitespace path for rows
+    outside the gate) is byte-identical to the ``normalize_text`` UDF on
+    four strings around every non-surrogate code point."""
+    texts = [None, "", "   "]
+    for cp in _code_points():
+        c = chr(cp)
+        texts += [c, "a" + c + "  b", c + "\u0301", " x" + c + "\x1c"]
+    path = str(tmp_path / "every_code_point.parquet")
+    pq.write_table(
+        pa.table({"text": pa.array(texts, pa.string())}), path,
+        row_group_size=len(texts) // 8 + 1,
+    )
+    df = spark.read.parquet(path)
+    out = df.select(
+        "text",
+        normalize_text(F.col("text")).alias("udf"),
+        normalize_text_col(F.col("text")).alias("col"),
+    )
+    bad = out.where(~F.col("udf").eqNullSafe(F.col("col")))
+    assert bad.count() == 0, [
+        ([hex(ord(x)) for x in r["text"]], r["udf"], r["col"]) for r in bad.limit(5).collect()
+    ]
+    assert out.count() == len(texts)

@@ -507,8 +507,10 @@ def upsert_ivf_index(
     updates = updates.persist()
     try:
         ups = updates
+        is_del = F.lit(False)
         if op_col is not None:
             ups = ups.filter(F.col(op_col) != "D")
+            is_del = F.col(op_col) == "D"
         (
             ups.withColumn("cell", assign(F.col(vec_col)))
             .withColumn("_lsn", F.col(lsn_col).cast("long"))
@@ -521,9 +523,14 @@ def upsert_ivf_index(
         updates.select(
             F.col(id_col).alias("id"), F.col(lsn_col).cast("long").alias("lsn")
         ).coalesce(1).write.mode("append").parquet(path + "_moved")
+        # one job over the cached batch, before it is released
+        n = updates.agg(
+            F.count(F.when(~is_del, 1)).alias("upserted"),
+            F.count(F.when(is_del, 1)).alias("tombstoned"),
+        ).first()
     finally:
         updates.unpersist()
-    return {"upserted": ups.count(), "tombstoned": updates.count()}
+    return {"upserted": n["upserted"], "tombstoned": n["tombstoned"]}
 
 
 def ivf_cell_stats(spark, path: str, id_col: str = "vec_id") -> dict:

@@ -148,7 +148,6 @@ class IcebergLakeTable(LakeTable):
         updates: DataFrame,
         batch_id: int | None = None,
         offset_range: tuple[int, int] | None = None,
-        transform_deduped=None,
         post_write_stats=None,
         **_hints,
     ) -> MergeStats:
@@ -170,8 +169,6 @@ class IcebergLakeTable(LakeTable):
         from pyspark.sql import functions as F
 
         deduped = lww_dedup_agg(updates, key_cols, "lsn", "ts")
-        if transform_deduped is not None:
-            deduped = transform_deduped(deduped)
         user_cols = [f.name for f in self.user_schema.fields]
         shaped = deduped.select(
             *[

@@ -1241,7 +1241,6 @@ class ParquetLakeTable(LakeTable):
         offset_range: tuple[int, int] | None = None,
         touched_buckets: list[int] | None = None,
         stats_hints: dict | None = None,
-        transform_deduped=None,
         post_write_stats=None,
         max_commit_retries: int = 5,
     ) -> MergeStats:
@@ -1267,7 +1266,6 @@ class ParquetLakeTable(LakeTable):
                     offset_range=offset_range,
                     touched_buckets=touched_buckets,
                     stats_hints=stats_hints,
-                    transform_deduped=transform_deduped,
                     post_write_stats=post_write_stats,
                 )
             except CommitConflictError:
@@ -1282,7 +1280,6 @@ class ParquetLakeTable(LakeTable):
         offset_range: tuple[int, int] | None = None,
         touched_buckets: list[int] | None = None,
         stats_hints: dict | None = None,
-        transform_deduped=None,
         post_write_stats=None,
     ) -> MergeStats:
         m = self.manifest()
@@ -1315,12 +1312,6 @@ class ParquetLakeTable(LakeTable):
             "_bucket", _bucket_expr(conv_key, n_buckets)
         ).repartition(n_parts, "_bucket")
         deduped = lww_dedup_agg(bucketed, ["_bucket"] + key_cols, "lsn", "ts")
-        if transform_deduped is not None:
-            # caller-supplied per-row transform (e.g. text normalization),
-            # deliberately applied POST-dedup: it runs in the reduce stage
-            # (n_parts tasks, independent of scan split count) and touches
-            # only the surviving row per key.
-            deduped = transform_deduped(deduped)
         # shape to the evolved physical schema: missing columns -> typed
         # nulls, narrower batch types -> widened casts
         shaped = deduped.select(

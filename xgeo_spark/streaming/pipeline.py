@@ -2,7 +2,7 @@
 
 Target-lifecycle shape (SURVEY.md §3.4): ``readStream`` over the
 offset-ordered feed -> ``foreachBatch`` -> inside each batch: quarantine
-split -> (optional) vectorized text normalization -> LWW dedup -> schema
+split -> (optional) gated text normalization -> LWW dedup -> schema
 diff/evolve -> idempotent MERGE commit -> lineage append. The checkpointed
 file-source offsets plus the sink's batch_id stamping give exactly-once:
 a crash replays the batch with the same batch_id and the sink skips it.
@@ -278,9 +278,11 @@ class CDCIngestPipeline:
         }
         if touched is not None:
             merge_kwargs["touched_buckets"] = touched
-        merge_kwargs.update(self._normalize_kwarg())
         stats = self.table.merge(
-            good, batch_id=batch_id, offset_range=offset_range, **merge_kwargs
+            self._normalized(good),
+            batch_id=batch_id,
+            offset_range=offset_range,
+            **merge_kwargs,
         )
         if self.lineage is not None:
             self.lineage.append(stats, partition_rows, rows_quarantined=n_bad)
@@ -294,23 +296,23 @@ class CDCIngestPipeline:
 
         return resolve_patches(good, self.table, KEY_COLS)
 
-    def _normalize_kwarg(self) -> dict:
-        if not self.config.normalize_text:
-            return {}
-        # Normalization runs AFTER the LWW dedup, inside the merge's
-        # reduce stage: that stage always has n_buckets tasks (scan
-        # parallelism doesn't cap it), and it sees only the surviving
-        # row per key — same result as normalizing every event (the
-        # UDF is deterministic per row), strictly less work. Running it
-        # pre-shuffle put the pandas UDF in the scan stage, whose task
-        # count is bounded by input splits — the 8->32-core wall.
-        from xgeo_spark.functions.text import normalize_text
+    def _normalized(self, good: DataFrame) -> DataFrame:
+        """The batch with ``text`` normalized, if the config asks for it.
 
-        return {
-            "transform_deduped": lambda df: df.withColumn(
-                "text", normalize_text(F.col("text"))
-            )
-        }
+        The column goes in BEFORE the merge's shuffle, so its Python
+        crossing (gated: only rows NFC can change carry their text) runs in
+        the scan stage, once per scan task. A Python worker costs ~0.24
+        CPU-s per task (4-core host) whatever its row count, which the
+        merge's reduce stage would pay in each of its n_buckets tasks. The
+        LWW order (lsn, ts, op_rank) never reads the payload and the
+        normalization is a deterministic function of one row, so the same
+        rows survive the dedup either way.
+        """
+        if not self.config.normalize_text:
+            return good
+        from xgeo_spark.functions.text import normalize_text_col
+
+        return good.withColumn("text", normalize_text_col(F.col("text")))
 
     def _maybe_compact(self, stats: MergeStats) -> None:
         # amortized read-cost control for merge-on-read tables. Runs AFTER
@@ -365,11 +367,11 @@ class CDCIngestPipeline:
             ),
             F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes_in"),
         )
+        # normalized after the observe, so lineage measures the raw text
         stats = self.table.merge(
-            good,
+            self._normalized(good),
             batch_id=batch_id,
             post_write_stats=lambda: obs.get,
-            **self._normalize_kwarg(),
         )
         if self.lineage is not None:
             self.lineage.append(
