@@ -107,35 +107,37 @@ def test_copy_on_write_manifest_reads_and_merges_as_mor(table, spark):
     assert [(r["turn_idx"], r["text"]) for r in changes] == [(1, "v4-b")]
 
 
+def _executed_merge_exchanges(spark) -> list[str]:
+    """Descriptions of the Exchange nodes in the last executed LWW merge
+    write (the execution whose plan holds a ``max_by`` aggregate and a
+    file write), read from Spark's SQL status store."""
+    ss = spark._jsparkSession.sharedState().statusStore()
+    execs = ss.executionsList()
+    for k in range(execs.size() - 1, -1, -1):
+        g = ss.planGraph(execs.apply(k).executionId())
+        nodes = [g.allNodes().apply(i) for i in range(g.allNodes().size())]
+        if any("max_by" in n.desc() for n in nodes) and any(
+            n.name() == "WriteFiles" for n in nodes
+        ):
+            return [n.desc() for n in nodes if n.name() == "Exchange"]
+    raise AssertionError("no merge execution found")
+
+
 def test_merge_plan_has_single_shuffle(spark, tmp_path):
     """Regression guard on the scale property the merge is built around:
     bucketing + LWW dedup grouped on (_bucket, key...) produce ONE exchange
     (the repartition satisfies the aggregate's clustering), so the batch is
-    moved across the cluster exactly once per merge."""
-    import pandas as pd
+    moved across the cluster exactly once per merge. The exchange is as
+    wide as the session's slots (8 here), not the table's 32 buckets."""
+    import re
 
-    from xgeo_spark.operators.dedup import lww_dedup_agg
-    from xgeo_spark.sinks.parquet_lake import _bucket_expr
-
-    rows = pd.DataFrame(
-        {
-            "lsn": range(100),
-            "offset": range(100),
-            "op": ["U"] * 100,
-            "conv_id": [f"c{i % 7}" for i in range(100)],
-            "turn_idx": [i % 5 for i in range(100)],
-            "text": ["t"] * 100,
-            "ts": pd.to_datetime(["2026-01-01"] * 100),
-        }
-    )
-    updates = spark.createDataFrame(rows)
-    bucketed = updates.withColumn(
-        "_bucket", _bucket_expr("conv_id", 8)
-    ).repartition(8, "_bucket")
-    deduped = lww_dedup_agg(bucketed, ["_bucket", "conv_id", "turn_idx"], "lsn", "ts")
-    plan = deduped._jdf.queryExecution().executedPlan().toString()
-    n_exchanges = plan.count("Exchange")
-    assert n_exchanges == 1, f"expected 1 exchange, got {n_exchanges}:\n{plan}"
+    t = ParquetLakeTable(spark, str(tmp_path / "lake"))
+    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=32)
+    t.merge(_batch(spark, 0, {i: f"t{i}" for i in range(5)}), batch_id=0)
+    exchanges = _executed_merge_exchanges(spark)
+    n_exchanges = len(exchanges)
+    assert n_exchanges == 1, f"expected 1 exchange, got {n_exchanges}: {exchanges}"
+    assert re.search(r"hashpartitioning\(_bucket#\d+, 8\)", exchanges[0]), exchanges
 
 
 def test_concurrent_writer_conflict_detected(spark, tmp_path):
@@ -515,4 +517,89 @@ def test_wide_bucket_layout_writes_only_touched_buckets(spark, tmp_path):
 
     got = t.read().orderBy("conv_id", "turn_idx").toPandas()
     exp = lww_oracle(generate_change_events(cfg))
+    assert got["text"].fillna("∅").tolist() == exp["text"].fillna("∅").tolist()
+
+
+def test_writes_keep_one_file_per_bucket_when_slots_are_fewer_than_buckets(
+    spark, tmp_path
+):
+    """32 buckets in the 8-slot session: each reduce task of a merge, a
+    minor fold, a major fold and a rebucket holds several whole buckets.
+    After every write each touched bucket gained exactly one file, every
+    manifest entry lives under its own ``_bucket=`` directory and nothing
+    else was written; the final read equals the LWW oracle."""
+    from pyspark.sql import functions as F
+
+    from xgeo_spark.fixtures.generator import (
+        ChangeStreamConfig,
+        generate_change_events,
+        lww_oracle,
+    )
+    from xgeo_spark.sinks.parquet_lake import _bucket_expr
+
+    events = generate_change_events(ChangeStreamConfig(
+        n_events=3_000, n_convs=60, seed=17, schema_change_at=1.0,
+    )).drop(columns="tool_meta").sort_values("offset")
+    batches = [
+        spark.createDataFrame(part).withColumn(
+            "turn_idx", F.col("turn_idx").cast("int")
+        )
+        for part in (events.iloc[:1000], events.iloc[1000:2000], events.iloc[2000:])
+    ]
+    root = tmp_path / "lake"
+    t = ParquetLakeTable(spark, str(root))
+    t.create(TRANSCRIPT_SCHEMA, KEY_COLS, n_buckets=32)
+
+    def files_by_bucket(m):
+        out: dict[int, set[str]] = {}
+        for coll in (m["buckets"], m["deltas"]):
+            for b, fl in coll.items():
+                out.setdefault(int(b), set()).update(fl)
+        return out
+
+    def batch_buckets(df, n):
+        return {r[0] for r in df.select(_bucket_expr("conv_id", n)).distinct().collect()}
+
+    def check_write(before, expected_buckets):
+        after = t.manifest()
+        old = {f for fl in files_by_bucket(before).values() for f in fl}
+        new = {
+            b: fl - old for b, fl in files_by_bucket(after).items() if fl - old
+        }
+        assert set(new) == expected_buckets
+        assert all(len(fl) == 1 for fl in new.values()), new
+        for b, fl in files_by_bucket(after).items():
+            assert all(f"/_bucket={b}/" in f for f in fl), (b, fl)
+        written = {f for fl in new.values() for f in fl}
+        vdirs = {f.split("/")[1] for f in written}
+        on_disk = {
+            os.path.relpath(os.path.join(d, n), root)
+            for vd in vdirs
+            for d, _, names in os.walk(root / "data" / vd)
+            for n in names
+            if n.endswith(".parquet")
+        }
+        assert on_disk == written
+        return after
+
+    m = t.manifest()
+    for i, b in enumerate(batches[:2]):
+        t.merge(b, batch_id=i)
+        m = check_write(m, batch_buckets(b, 32))
+    raw = {int(b) for b, fl in m["deltas"].items() if fl}
+    t.compact_minor()
+    m = check_write(m, raw)
+    t.merge(batches[2], batch_id=2)
+    m = check_write(m, batch_buckets(batches[2], 32))
+    t.compact()
+    m = check_write(m, {int(b) for coll in (m["buckets"], m["deltas"])
+                        for b, fl in coll.items() if fl})
+    t.rebucket(48)
+    check_write(m, batch_buckets(t.read(include_system=True), 48))
+
+    got = t.read().orderBy("conv_id", "turn_idx").toPandas()
+    exp = lww_oracle(events)
+    assert got[["conv_id", "turn_idx"]].values.tolist() == exp[
+        ["conv_id", "turn_idx"]
+    ].values.tolist()
     assert got["text"].fillna("∅").tolist() == exp["text"].fillna("∅").tolist()

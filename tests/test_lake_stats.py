@@ -86,6 +86,33 @@ def test_file_stats_recorded_and_carried(table):
     assert set(m2["file_stats"]) == _all_files(m2)
 
 
+def test_unreadable_footer_drops_only_that_files_stats(table, monkeypatch):
+    """A footer read that fails (a truncated file) leaves THAT file without
+    stats, so readers plan it unpruned; a bug in the stats conversion
+    itself surfaces instead of silently making every file unprunable."""
+    import os
+    import posixpath
+
+    m = table.manifest()
+    good = sorted(_all_files(m))[0]
+    broken = posixpath.join(posixpath.dirname(good), "truncated.parquet")
+    with open(os.path.join(table.root, good), "rb") as f:
+        data = f.read()
+    with open(os.path.join(table.root, broken), "wb") as f:
+        f.write(data[: len(data) // 2])
+
+    stats = table._collect_file_stats({0: [good, broken]})
+    assert set(stats) == {good}
+    assert stats[good] == m["file_stats"][good]
+
+    def boom(value):
+        raise TypeError("stats conversion bug")
+
+    monkeypatch.setattr(ParquetLakeTable, "_ts_us", staticmethod(boom))
+    with pytest.raises(TypeError, match="stats conversion bug"):
+        table._collect_file_stats({0: [good]})
+
+
 def test_lookup_reads_one_bucket_and_matches_full_read(table, monkeypatch, spark):
     table.compact()
     m = table.manifest()

@@ -28,7 +28,9 @@ Two physical strategies, identical semantics (property-tested equal):
   difference between shuffling the feed and shuffling ~|keys| rows. Skew
   needs no salting: partial aggregation already spreads hot-key work
   across input partitions. The price is a per-task sort on each side of
-  the exchange (tests/test_dedup.py pins this plan).
+  the exchange (tests/test_dedup.py pins this plan). The lake merge hands
+  it a batch already hash-partitioned on ``_bucket``, so there both
+  phases run after that one exchange and duplicates cross it.
 
 The pipeline defaults to the agg strategy; the window strategy is kept both
 as the semantic reference and for operator parity (SURVEY.md §2.4).

@@ -24,9 +24,10 @@ runs against file: in tests and HDFS/S3A on a cluster.
 Merge-on-read (Iceberg's MoR): a merge appends the batch's deduped rows as
 DELTA files per bucket — write cost is O(batch), independent of table
 size. Reads union base+delta and reduce to the last writer per key
-(`max_by` over (lsn, commit-seq) — partial-aggregated, so the reduce is
-map-side combined). ``compact_minor()`` folds a bucket's raw deltas into
-one run file and ``compact()`` folds base+runs+raw into a new base; the
+(`max_by` over (lsn, commit-seq); ``read()``/``lookup()`` plan a partial
+aggregate below their exchange, so duplicates combine map-side there).
+``compact_minor()`` folds a bucket's raw deltas into one run file and
+``compact()`` folds base+runs+raw into a new base; the
 pipeline's one policy (``streaming.pipeline.select_compaction``) decides
 per bucket when each runs, amortizing read cost while keeping ingest
 O(batch). At 10^10 events this is the difference between ingest
@@ -39,14 +40,16 @@ Scale design:
   n_buckets)``) — the moral equivalent of Iceberg's ``bucket(N, conv_id)``
   hidden partitioning. At 100 TB you raise ``n_buckets`` (e.g. 4096) so each
   rewrite/compaction unit stays executor-sized.
-- **One shuffle per merge**: the batch is repartitioned by ``_bucket``
-  FIRST, and the LWW dedup groups on ``(_bucket, key...)`` — because
-  ``HashPartitioning(_bucket)`` satisfies the aggregate's clustered
-  distribution (``_bucket`` ⊆ grouping keys), Catalyst inserts no second
-  exchange, and each reducer task holds exactly the rows of its storage
-  bucket, which the write then emits via ``partitionBy`` with no further
-  movement. The previous plan (dedup shuffle on key, then a repartition
-  shuffle on bucket) moved the batch twice.
+- **One shuffle per bucketed write** (merge, fold, rebucket): the input is
+  repartitioned by ``_bucket`` FIRST, into ``min(buckets the write can
+  touch, executor slots)`` partitions (``_by_bucket``), and the LWW dedup
+  groups on ``(_bucket, key...)`` — because ``HashPartitioning(_bucket)``
+  satisfies the aggregate's clustered distribution (``_bucket`` ⊆
+  grouping keys), Catalyst inserts no second exchange. Each reduce task
+  holds every row of the several whole buckets hashed to it, and the
+  ``partitionBy`` write emits one file per bucket with no further
+  movement. The aggregate sits after the exchange, so duplicates cross
+  the shuffle uncombined (shuffle records = input rows).
 - Deletes are tombstones (``_deleted`` + ``_lsn`` retained), so a late,
   lower-lsn update arriving AFTER a delete cannot resurrect the key —
   replay converges regardless of arrival order.
@@ -85,6 +88,20 @@ _VERSION_RE = re.compile(r"^v(\d{12})\.json$")
 
 def _bucket_expr(conv_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(conv_col)), F.lit(n_buckets)).cast("int")
+
+
+def _by_bucket(df: DataFrame, conv_col: str, n_buckets: int, groups: int) -> DataFrame:
+    """``df`` with its ``_bucket`` column, hash-partitioned on it into
+    ``min(groups, executor slots)`` partitions — the one shuffle width of
+    every bucketed write (merge, fold, rebucket). ``groups`` is the number
+    of buckets the write can touch. A bucket's rows all land in one task,
+    so the ``partitionBy("_bucket")`` write still emits one file per
+    bucket; a task just holds several buckets instead of paying one task
+    (and one task commit) per bucket."""
+    width = max(1, min(groups, df.sparkSession.sparkContext.defaultParallelism))
+    return df.withColumn("_bucket", _bucket_expr(conv_col, n_buckets)).repartition(
+        width, "_bucket"
+    )
 
 
 class CommitConflictError(RuntimeError):
@@ -190,6 +207,7 @@ class ParquetLakeTable(LakeTable):
         root = self._local_data_root()
         if root is None:
             return {}
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         out: dict[str, dict] = {}
@@ -226,8 +244,10 @@ class ParquetLakeTable(LakeTable):
                             stat[lo_k] = conv(min(los))
                             stat[hi_k] = conv(max(his))
                     out[rel] = stat
-                except Exception:
-                    continue  # absent stats for THIS file only -> unprunable
+                except (OSError, pa.ArrowInvalid):
+                    # an unreadable footer: absent stats for THIS file only
+                    # -> unprunable. Anything else is a bug and surfaces.
+                    continue
         return out
 
     @staticmethod
@@ -292,8 +312,11 @@ class ParquetLakeTable(LakeTable):
     def _lww_reduce(self, df: DataFrame, key_cols: list[str]) -> DataFrame:
         """Reduce (base ∪ deltas) to the last writer per key. Total order:
         (_lsn, _seq). ``max_by`` over a struct holding strings plans as a
-        sort-based aggregate (Sort + partial SortAggregate -> Exchange ->
-        Sort + SortAggregate), map-side combined."""
+        sort-based aggregate. On ``read()``/``lookup()`` it plans as Sort +
+        partial SortAggregate -> Exchange -> Sort + SortAggregate, so
+        duplicates combine map-side; a fold or rebucket hands it input
+        already hash-partitioned on ``_bucket`` (``_by_bucket``), so both
+        aggregate steps run after that one exchange."""
         payload = [c for c in df.columns if c not in key_cols]
         ord_key = F.struct(
             F.col("_lsn").alias("l"), F.coalesce(F.col("_seq"), F.lit(0)).alias("s")
@@ -799,14 +822,14 @@ class ParquetLakeTable(LakeTable):
                     + folded[str(b)]
                 )
             ]
-            combined = (
-                self._read_files(files, physical)
-                .withColumn("_bucket", _bucket_expr(key_cols[0], m["n_buckets"]))
-                .repartition(len(touched), "_bucket")
+            combined = _by_bucket(
+                self._read_files(files, physical), key_cols[0],
+                m["n_buckets"], len(touched),
             )
             # _bucket in the grouping keys → the repartition above satisfies
-            # the aggregate's distribution: one shuffle total, reducers
-            # co-located with the bucket layout the write needs.
+            # the aggregate's distribution: one shuffle total, each of the
+            # min(touched, slots) reduce tasks holding whole buckets, one
+            # file per bucket from the partitionBy write.
             reduced = self._lww_reduce(combined, ["_bucket"] + key_cols)
             written = self._write_buckets(
                 reduced,
@@ -926,8 +949,8 @@ class ParquetLakeTable(LakeTable):
 
         This is a full-table rewrite — an offline maintenance operation to
         run rarely and deliberately (the moral analogue of rewriting data
-        files after Iceberg partition-spec evolution), parallel across the
-        NEW bucket count."""
+        files after Iceberg partition-spec evolution), parallel across
+        min(new bucket count, executor slots) tasks."""
         m = self.manifest()
         if new_n_buckets < 1:
             raise ValueError("new_n_buckets must be >= 1")
@@ -947,10 +970,9 @@ class ParquetLakeTable(LakeTable):
         new_m = dict(m)
         new_m["n_buckets"] = new_n_buckets
         if files:
-            combined = (
-                self._read_files(files, physical)
-                .withColumn("_bucket", _bucket_expr(key_cols[0], new_n_buckets))
-                .repartition(new_n_buckets, "_bucket")
+            combined = _by_bucket(
+                self._read_files(files, physical), key_cols[0],
+                new_n_buckets, new_n_buckets,
             )
             reduced = self._lww_reduce(combined, ["_bucket"] + key_cols)
             written = self._write_buckets(reduced, version, new_m)
@@ -1194,8 +1216,9 @@ class ParquetLakeTable(LakeTable):
         out_dir = posixpath.join(self.root, "data", vdir)
         # leading _bucket makes the requested ordering a suffix-match of
         # the upstream sort-aggregate's (_bucket, key...) output order,
-        # so Catalyst elides this Sort entirely; per task (= one bucket)
-        # the physical row order is identical. A caller-supplied sort_cols
+        # so Catalyst elides this Sort entirely; a task holding several
+        # whole buckets writes them in that order, one file per bucket
+        # (more only past maxRecordsPerFile). A caller-supplied sort_cols
         # (clustered compaction) is a REAL sort — that's its point.
         writer = (
             df.sortWithinPartitions("_bucket", *(sort_cols or m["key_cols"]))
@@ -1239,7 +1262,6 @@ class ParquetLakeTable(LakeTable):
         updates: DataFrame,
         batch_id: int | None = None,
         offset_range: tuple[int, int] | None = None,
-        touched_buckets: list[int] | None = None,
         stats_hints: dict | None = None,
         post_write_stats=None,
         max_commit_retries: int = 5,
@@ -1264,7 +1286,6 @@ class ParquetLakeTable(LakeTable):
                     updates,
                     batch_id=batch_id,
                     offset_range=offset_range,
-                    touched_buckets=touched_buckets,
                     stats_hints=stats_hints,
                     post_write_stats=post_write_stats,
                 )
@@ -1278,7 +1299,6 @@ class ParquetLakeTable(LakeTable):
         updates: DataFrame,
         batch_id: int | None = None,
         offset_range: tuple[int, int] | None = None,
-        touched_buckets: list[int] | None = None,
         stats_hints: dict | None = None,
         post_write_stats=None,
     ) -> MergeStats:
@@ -1300,17 +1320,14 @@ class ParquetLakeTable(LakeTable):
         new_user = evolve_schema(old_user, T.StructType(payload_fields))
         schema_changed = new_user != old_user
 
-        conv_key = key_cols[0]
-        n_parts = max(1, len(touched_buckets) if touched_buckets else n_buckets)
-
         # 2. ONE shuffle: bucket the raw batch, then LWW-dedup grouping on
         # (_bucket, key...) — the repartition satisfies the aggregate's
-        # clustering (no second exchange) and leaves each reducer holding
-        # exactly one storage bucket for the partitionBy write below.
+        # clustering (no second exchange). Duplicates cross it: the
+        # aggregate runs after the exchange. Each of the
+        # min(n_buckets, slots) reduce tasks holds whole buckets, and the
+        # partitionBy write below emits one file per bucket.
         # (see operators/dedup.py for the max_by total order)
-        bucketed = updates.withColumn(
-            "_bucket", _bucket_expr(conv_key, n_buckets)
-        ).repartition(n_parts, "_bucket")
+        bucketed = _by_bucket(updates, key_cols[0], n_buckets, n_buckets)
         deduped = lww_dedup_agg(bucketed, ["_bucket"] + key_cols, "lsn", "ts")
         # shape to the evolved physical schema: missing columns -> typed
         # nulls, narrower batch types -> widened casts

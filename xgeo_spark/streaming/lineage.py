@@ -17,7 +17,6 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from xgeo_spark.sinks.base import MergeStats
@@ -66,23 +65,6 @@ class LineageLog:
         self.spark = spark
         self.path = path
         self.fs = HadoopFS(spark, path)
-
-    def partition_metrics(self, batch_df: DataFrame) -> DataFrame:
-        """One row per input partition: offsets covered, rows, approx bytes.
-
-        A single narrow aggregation over the batch (map-side combined on
-        spark_partition_id, which is already co-located — no real shuffle
-        pressure)."""
-        return batch_df.groupBy(
-            F.spark_partition_id().alias("partition_id")
-        ).agg(
-            F.min("offset").alias("offset_start"),
-            F.max("offset").alias("offset_end"),
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(F.octet_length(F.coalesce(F.col("text"), F.lit("")))).alias(
-                "approx_bytes"
-            ),
-        )
 
     def append(
         self,

@@ -207,40 +207,28 @@ class CDCIngestPipeline:
 
         # ONE pre-aggregation pass over the batch computes everything the
         # driver needs before the merge: per-partition lineage metrics,
-        # offset range, max schema_version (did v2 rows arrive yet?), and
-        # the set of storage buckets the batch touches. All map-side
-        # combined on spark_partition_id — no meaningful shuffle. The pass
-        # touches only 6 narrow columns, so column pruning reaches the scan
-        # (parquet reads ~none of the text bytes); this is deliberately
-        # CHEAPER than caching the batch — a persist would write+read the
-        # whole decoded batch through the memory store and, at 10^7-row
-        # micro-batches on real executors, compete with the shuffle for
-        # memory. Two scans, one of them skeletal, beat one scan + a
+        # offset range and max schema_version (did v2 rows arrive yet?).
+        # All map-side combined on spark_partition_id — no meaningful
+        # shuffle. The pass reads four columns (offset, op, schema_version
+        # and text for its byte length), so column pruning reaches the
+        # scan; this is deliberately CHEAPER than caching the batch — a
+        # persist would write+read the whole decoded batch through the
+        # memory store and, at 10^7-row micro-batches on real executors,
+        # compete with the shuffle for memory. Two scans, one of them skeletal, beat one scan + a
         # materialized cache. (approx_bytes is therefore over the RAW text;
         # it is an approximation either way.)
-        from xgeo_spark.sinks.parquet_lake import ParquetLakeTable, _bucket_expr
-
-        n_buckets = None
-        if isinstance(self.table, ParquetLakeTable) and self.table.exists():
-            n_buckets = self.table.manifest()["n_buckets"]
-
-        pre = good
-        aggs = [
-            F.min("offset").alias("offset_start"),
-            F.max("offset").alias("offset_end"),
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(F.octet_length(F.coalesce(F.col("text"), F.lit("")))).alias(
-                "approx_bytes"
-            ),
-            F.max(F.coalesce(F.col("schema_version"), F.lit(1))).alias("max_sv"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes_in"),
-        ]
-        if n_buckets is not None:
-            pre = pre.withColumn("_b", _bucket_expr("conv_id", n_buckets))
-            aggs.append(F.collect_set("_b").alias("buckets"))
         pm = (
-            pre.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(*aggs)
+            good.groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(
+                F.min("offset").alias("offset_start"),
+                F.max("offset").alias("offset_end"),
+                F.count(F.lit(1)).alias("rows_in"),
+                F.sum(F.octet_length(F.coalesce(F.col("text"), F.lit("")))).alias(
+                    "approx_bytes"
+                ),
+                F.max(F.coalesce(F.col("schema_version"), F.lit(1))).alias("max_sv"),
+                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes_in"),
+            )
             .collect()
         )
         partition_rows = [r.asDict() for r in pm]
@@ -252,11 +240,6 @@ class CDCIngestPipeline:
         ]
         offset_range = (
             (min(o[0] for o in offs), max(o[1] for o in offs)) if offs else None
-        )
-        touched = (
-            sorted({b for r in partition_rows for b in (r.get("buckets") or [])})
-            if n_buckets is not None
-            else None
         )
 
         # events whose source file predates the schema change simply lack
@@ -270,19 +253,14 @@ class CDCIngestPipeline:
         # batch's wire version doesn't carry yet
         good = self._resolve_patches_if_enabled(good)
 
-        merge_kwargs = {
-            "stats_hints": {
-                "rows_in": sum((r["rows_in"] or 0) for r in partition_rows),
-                "deletes_in": sum((r["deletes_in"] or 0) for r in partition_rows),
-            }
-        }
-        if touched is not None:
-            merge_kwargs["touched_buckets"] = touched
         stats = self.table.merge(
             self._normalized(good),
             batch_id=batch_id,
             offset_range=offset_range,
-            **merge_kwargs,
+            stats_hints={
+                "rows_in": sum((r["rows_in"] or 0) for r in partition_rows),
+                "deletes_in": sum((r["deletes_in"] or 0) for r in partition_rows),
+            },
         )
         if self.lineage is not None:
             self.lineage.append(stats, partition_rows, rows_quarantined=n_bad)
@@ -303,10 +281,10 @@ class CDCIngestPipeline:
         crossing (gated: only rows NFC can change carry their text) runs in
         the scan stage, once per scan task. A Python worker costs ~0.24
         CPU-s per task (4-core host) whatever its row count, which the
-        merge's reduce stage would pay in each of its n_buckets tasks. The
-        LWW order (lsn, ts, op_rank) never reads the payload and the
-        normalization is a deterministic function of one row, so the same
-        rows survive the dedup either way.
+        merge's reduce stage would pay in each of its min(n_buckets,
+        slots) tasks. The LWW order (lsn, ts, op_rank) never reads the
+        payload and the normalization is a deterministic function of one
+        row, so the same rows survive the dedup either way.
         """
         if not self.config.normalize_text:
             return good
